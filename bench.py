@@ -81,8 +81,6 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=0,
                     help="override measured runs per query (0 = default)")
-    ap.add_argument("--narrow", action="store_true",
-                    help="featurize with text dropped pre-window + re-join")
     args = ap.parse_args()
 
     import pyspark.sql.functions as F  # noqa: F401
@@ -136,7 +134,7 @@ def main() -> None:
 
     # headline: full leakage-free feature materialization (hybrid physical
     # strategy — hot conversations take the salted/chunked path)
-    feats = featurize_hybrid(t, narrow=args.narrow)
+    feats = featurize_hybrid(t)
     big = args.synth >= 4_000_000
     # Fresh executor JVMs pay first-touch page faults on their window/
     # shuffle buffers during the first executions (the Firecracker fault

@@ -18,20 +18,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def materialize(df, warmup: int, runs: int) -> float:
-    for _ in range(warmup):
-        df.write.format("noop").mode("overwrite").save()
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
+from bench import materialize  # noqa: E402
 
 
 def main() -> None:

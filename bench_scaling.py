@@ -88,7 +88,7 @@ def load_obs(shape: dict) -> tuple[list[float], list[float]]:
     return lo, hi
 
 
-def run_local(cpus: int, turns: int, runs: int = 5, narrow: bool = False) -> dict:
+def run_local(cpus: int, turns: int, runs: int = 5) -> dict:
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS=str(cpus),
@@ -104,8 +104,6 @@ def run_local(cpus: int, turns: int, runs: int = 5, narrow: bool = False) -> dic
         "--runs",
         str(runs),
     ]
-    if narrow:
-        cmd.append("--narrow")
     out = subprocess.run(
         cmd, env=env, capture_output=True, text=True, check=True, cwd=REPO
     )
@@ -274,11 +272,11 @@ def main() -> None:
         }
 
     if args.mode in ("both", "local"):
-        def best_of(repeats: int, narrow: bool):
+        def best_of(repeats: int):
             lo_best, hi_best, lo_all, hi_all = None, None, [], []
             for _ in range(repeats):
-                l = run_local(args.n, args.turns, narrow=narrow)
-                h = run_local(args.xn, args.turns, narrow=narrow)
+                l = run_local(args.n, args.turns)
+                h = run_local(args.xn, args.turns)
                 lo_all.append(l["queries"]["featurize_full"])
                 hi_all.append(h["queries"]["featurize_full"])
                 if lo_best is None or l["queries"]["featurize_full"] < lo_best["queries"]["featurize_full"]:
@@ -287,7 +285,7 @@ def main() -> None:
                     hi_best = h
             return lo_best, hi_best, lo_all, hi_all
 
-        lo, hi, lo_all, hi_all = best_of(args.repeats, narrow=False)
+        lo, hi, lo_all, hi_all = best_of(args.repeats)
         cpu_speedup, cpu_eff = cpu_control(args.n, args.xn)
         ratio = args.xn / args.n
         eff = {

@@ -91,8 +91,7 @@ def test_bucketed_fit_predict_no_whole_key_window(spark):
 def test_regression_state_decimal38_equals_long(spark):
     """stat_type='decimal38' widens the sufficient-statistic accumulators
     without changing a single value (cast back to long at test scale) —
-    on BOTH physical strategies, and the bucketed path's firsts_join
-    shuffle escape hatch matches the broadcast default."""
+    on BOTH physical strategies."""
     import pyspark.sql.functions as F
 
     from uncharted_ta1_pipeline_spark.operators.asof import (
@@ -115,10 +114,6 @@ def test_regression_state_decimal38_equals_long(spark):
     pd.testing.assert_frame_equal(base, norm(regression_state(t, stat_type="decimal38")))
     pd.testing.assert_frame_equal(
         base, norm(regression_state_bucketed(t, chunk_size=7, stat_type="decimal38"))
-    )
-    pd.testing.assert_frame_equal(
-        base,
-        norm(regression_state_bucketed(t, chunk_size=7, firsts_join="shuffle")),
     )
 
 

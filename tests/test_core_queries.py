@@ -70,31 +70,3 @@ def test_all_queries_have_oracles():
     qs, os_ = e.queries(), e.oracle_sql()
     missing = [k for k in os_ if k not in qs]
     assert not missing, f"oracle without query: {missing}"
-
-
-def test_ransac_strategy_equivalence(spark):
-    """The batched (mapInPandas, per-partition Arrow transfer) and grouped
-    (applyInPandas, per-group transfer) physical strategies of ransac_slope
-    produce identical frames — the grouped-map UDF surface stays covered
-    while the default avoids the per-group Arrow round-trip."""
-    import pandas as pd
-
-    from tests.conftest import SF_SMOKE
-    from uncharted_ta1_pipeline_spark.operators.outliers import ransac_slope
-    from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
-
-    t = load_transcripts(spark, SF_SMOKE)
-    a = (
-        ransac_slope(t, strategy="batched")
-        .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        ransac_slope(t, strategy="grouped")
-        .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) > 0

@@ -18,10 +18,14 @@ LOOKAHEAD = {"next_role"}  # explicitly documented lookahead feature
 
 
 def _features(df, salted=False):
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_salted
+    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
 
-    out = featurize_salted(df, chunk_size=16) if salted else featurize(df)
+    out = (
+        featurize_hybrid(df, hot_threshold=0, chunk_size=16)
+        if salted
+        else featurize(df)
+    )
     return out.drop(*LOOKAHEAD)
 
 

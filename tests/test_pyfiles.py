@@ -46,7 +46,7 @@ def test_zip_importable_standalone(tmp_path):
     code = (
         "import sys; sys.path.insert(0, %r); "
         "import uncharted_ta1_pipeline_spark.operators.outliers, "
-        "uncharted_ta1_pipeline_spark.operators.multimodal, "
+        "uncharted_ta1_pipeline_spark.operators.dedup, "
         "uncharted_ta1_pipeline_spark.functions.geof; "
         "print('ok')" % path
     )

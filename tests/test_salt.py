@@ -1,6 +1,7 @@
-"""featurize_salted is a physical strategy, not a semantic change: its
-output must equal featurize() exactly — including at chunk sizes small
-enough that every conversation spans many chunks."""
+"""Salting is a physical strategy, not a semantic change: featurize_hybrid
+must equal featurize() exactly in every routing regime — including at
+chunk sizes small enough that every conversation spans many chunks
+(``hot_threshold=0`` salts every conversation)."""
 
 from __future__ import annotations
 
@@ -19,20 +20,20 @@ def _cmp(a: pd.DataFrame, b: pd.DataFrame, key=("conv_id", "turn_idx")):
 
 @pytest.mark.parametrize("chunk_size", [7, 64, 100000])
 def test_salted_equals_plain(spark, chunk_size):
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_salted
+    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     t = load_transcripts(spark, SF_SMOKE)
     plain = featurize(t).toPandas()
-    salted = featurize_salted(t, chunk_size=chunk_size).toPandas()
+    salted = featurize_hybrid(t, hot_threshold=0, chunk_size=chunk_size).toPandas()
     _cmp(plain, salted)
 
 
 def test_salted_on_synthetic_hot_conv(spark):
     """A hot conversation spanning many chunks, with long gaps (session
     boundaries) landing on chunk edges."""
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_salted
+    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
     from uncharted_ta1_pipeline_spark.sources.transcripts import synth_transcripts
 
@@ -40,44 +41,14 @@ def test_salted_on_synthetic_hot_conv(spark):
         spark, n_convs=20, mean_turns=30, hot_convs=2, hot_turns=3000, seed=7
     )
     plain = featurize(t).toPandas()
-    salted = featurize_salted(t, chunk_size=256).toPandas()
+    salted = featurize_hybrid(t, hot_threshold=0, chunk_size=256).toPandas()
     _cmp(plain, salted)
 
 
-def test_hybrid_narrow_equals_plain(spark):
-    """The narrow path (text dropped before the windows, re-joined after)
-    is a physical strategy too: output equals featurize() exactly,
-    byte-identical text included."""
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
-    from uncharted_ta1_pipeline_spark.operators.windows import featurize
-    from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
-
-    t = load_transcripts(spark, SF_SMOKE)
-    plain = featurize(t).toPandas()
-    narrow = featurize_hybrid(t, narrow=True).toPandas()
-    _cmp(plain, narrow)
-
-
-def test_hybrid_narrow_routes_hot_convs(spark):
-    """narrow + hot routing together (a hot conv above the threshold)."""
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
-    from uncharted_ta1_pipeline_spark.operators.windows import featurize
-    from uncharted_ta1_pipeline_spark.sources.transcripts import synth_transcripts
-
-    t = synth_transcripts(
-        spark, n_convs=10, mean_turns=30, hot_convs=1, hot_turns=2000, seed=11
-    )
-    plain = featurize(t).toPandas()
-    hybrid = featurize_hybrid(
-        t, hot_threshold=1000, chunk_size=256, narrow=True
-    ).toPandas()
-    _cmp(plain, hybrid)
-
-
 def test_single_pass_routing_equals_plain(spark):
-    """The single-pass routed path (hot flag inside one salted pass — the
-    default) is frame-equal to featurize() in every routing regime: mixed
-    hot/cold, all-cold (empty hot dim), all-hot."""
+    """The routed path (hot flag inside one salted pass) is frame-equal to
+    featurize() in every routing regime — mixed hot/cold, all-cold (empty
+    hot dim, the plain route), all-hot — and honours ``gap_s`` on each."""
     from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
     from uncharted_ta1_pipeline_spark.sources.transcripts import synth_transcripts
@@ -85,23 +56,23 @@ def test_single_pass_routing_equals_plain(spark):
     t = synth_transcripts(
         spark, n_convs=10, mean_turns=30, hot_convs=1, hot_turns=2000, seed=13
     )
-    plain = featurize(t).toPandas()
-    for thr in (1000, 10**9, 1):  # mixed, all-cold, all-hot
-        routed = featurize_hybrid(
-            t, hot_threshold=thr, chunk_size=256, single_pass=True
-        ).toPandas()
-        _cmp(plain, routed)
+    for gap_s in (60, 1800):
+        plain = featurize(t, gap_s=gap_s).toPandas()
+        for thr in (1000, 10**9, 1):  # mixed, all-cold, all-hot
+            routed = featurize_hybrid(
+                t, hot_threshold=thr, chunk_size=256, gap_s=gap_s
+            ).toPandas()
+            _cmp(plain, routed)
 
 
 def test_single_pass_scans_input_once(spark):
-    """The routed plan reads the full-width input ONCE (plus the
-    column-pruned conv_id scan for the hot dim) — the branched path reads
-    it once per branch."""
+    """The salted plan reads the full-width input ONCE (plus the
+    column-pruned scans for the hot dim and the chunk sums)."""
     from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     t = load_transcripts(spark, SF_SMOKE)
-    plan = featurize_hybrid(t, single_pass=True)._jdf.queryExecution().executedPlan().toString()
+    plan = featurize_hybrid(t, hot_threshold=0)._jdf.queryExecution().executedPlan().toString()
     # transcripts derive text from events.props (sources/transcripts.py), so a
     # full-width scan is one whose parquet ReadSchema includes props; column
     # pruning must confine props to exactly ONE scan (the offsets branch and
@@ -113,15 +84,13 @@ def test_single_pass_scans_input_once(spark):
 
 def test_chunk_size_guard(spark):
     """chunk_size <= rolling_width would silently corrupt boundary frames;
-    it must raise instead."""
-    import pytest
-
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_salted
+    it must raise instead — even on input with no hot conversation."""
+    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     t = load_transcripts(spark, SF_SMOKE)
     with pytest.raises(ValueError, match="chunk_size"):
-        featurize_salted(t, chunk_size=5, rolling_width=5)
+        featurize_hybrid(t, chunk_size=5, rolling_width=5)
 
 
 def test_ingest_invariant_turn_idx_unique(spark):
@@ -147,22 +116,3 @@ def test_ingest_invariant_turn_idx_unique(spark):
             .filter(F.col("n") > 1)
         )
         assert dupes.isEmpty(), dupes.limit(5).toPandas()
-
-
-def test_firsts_join_shuffle_equals_broadcast(spark):
-    """firsts_join='shuffle' (the beyond-broadcast-budget escape hatch for
-    the |hot| x vocabulary dim) is a physical strategy only: output equals
-    the broadcast default exactly, and the plan actually shuffles the dim
-    (no BroadcastExchange feeding that join)."""
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_salted
-    from uncharted_ta1_pipeline_spark.operators.windows import featurize
-    from uncharted_ta1_pipeline_spark.sources.transcripts import synth_transcripts
-
-    t = synth_transcripts(
-        spark, n_convs=10, mean_turns=30, hot_convs=1, hot_turns=2000, seed=17
-    )
-    plain = featurize(t).toPandas()
-    shuffled = featurize_salted(t, chunk_size=256, firsts_join="shuffle")
-    _cmp(plain, shuffled.toPandas())
-    plan = shuffled._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan, plan[:2000]

@@ -251,7 +251,6 @@ def regression_state_bucketed(
     y_col: str = "signal",
     tiebreak: str = "turn_idx",
     chunk_size: int = 16_384,
-    firsts_join: str = "broadcast",
     stat_type: str = "long",
 ) -> DataFrame:
     """Chunk-bounded physical strategy for ``regression_state`` — same
@@ -272,11 +271,9 @@ def regression_state_bucketed(
     turn_idx, so the global min IS chunk 0's min IS the running min at any
     chunk (and is definitionally what the plain path's whole-key
     ``min().over(partitionBy(key))`` computes).  That tiny one-row-per-key
-    dim is broadcast (``firsts_join='broadcast'``; ``'shuffle'`` is the
-    escape hatch for corpora whose key count outgrows a broadcast), and
-    the enriched stream is exchanged ONCE on (key, chunk): the per-chunk
-    totals aggregation and the within-chunk cumulative window consume the
-    SAME exchange (ReusedExchange — verified in .explain), where the r4
+    dim is broadcast, and the enriched stream is exchanged ONCE on
+    (key, chunk): the per-chunk totals aggregation and the within-chunk
+    cumulative window consume the SAME exchange (ReusedExchange — verified in .explain), where the r4
     plan paid a second full-stream shuffle plus a per-chunk running-min
     window.  The offsets dim stays one row per (key, chunk).
 
@@ -286,8 +283,6 @@ def regression_state_bucketed(
     docstring) — same values, wider type; the OLS finish casts to double
     either way.  Reference analog:
     /root/reference/tasks/geo_referencing/geo_projection.py:52-115."""
-    if firsts_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"firsts_join must be broadcast|shuffle: {firsts_join}")
     if stat_type not in ("long", "decimal38"):
         raise ValueError(f"stat_type must be long|decimal38: {stat_type}")
     acc = "decimal(38,0)" if stat_type == "decimal38" else "long"
@@ -297,9 +292,9 @@ def regression_state_bucketed(
         .withColumn("_us", us_expr)
         .withColumn("_bchunk", F.floor(F.col(tiebreak) / F.lit(chunk_size)))
     )
-    firsts_key = narrow.groupBy(key).agg(F.min("_us").alias("first_us"))
-    if firsts_join == "broadcast":
-        firsts_key = F.broadcast(firsts_key)
+    firsts_key = F.broadcast(
+        narrow.groupBy(key).agg(F.min("_us").alias("first_us"))
+    )
     enriched = (
         narrow.join(firsts_key, on=key)
         .withColumn(

@@ -8,7 +8,7 @@ outlier_filter.py:34-293:
    Catalyst: exact ``percentile`` aggregates, no UDF.
 2. ``ransac_slope`` — the grouped-model pass: a seeded RANSAC line fit
    value~time per conversation (:163-231, seed 911 :191), implemented as
-   ``applyInPandas`` with numpy only.  Groups are capped by confidence
+   a per-partition ``mapInPandas`` with numpy only.  Groups are capped by confidence
    rank like the reference caps GCPs (MAX_GCPS=8, ground_control.py:17),
    so a hot conversation cannot blow up a single task.
 
@@ -116,15 +116,14 @@ def ransac_slope(
     max_obs_per_group: int = 512,
     n_iter: int = 32,
     seed: int = 911,
-    strategy: str = "batched",
 ) -> DataFrame:
     """Per-conversation robust line fit value ~ seconds-since-first-turn.
 
-    Vectorized Arrow path (`applyInPandas`, the grouped-map UDF surface);
-    numpy-only RANSAC mirroring /root/reference/tasks/geo_referencing/
-    outlier_filter.py:163-231.  Observations per group are capped by recency
-    to bound task size (the reference caps GCPs at MAX_GCPS=8,
-    ground_control.py:17; we keep more because the fit is cheap).
+    Vectorized Arrow path (``mapInPandas``); numpy-only RANSAC mirroring
+    the reference's tasks/geo_referencing/outlier_filter.py:163-231.
+    Observations per group are capped by recency to bound task size (the
+    reference caps GCPs at MAX_GCPS=8, ground_control.py:17; we keep more
+    because the fit is cheap).
 
     Fully deterministic and DuckDB-reproducible:
     - candidate sample indices are affine functions of the iteration number
@@ -134,17 +133,14 @@ def ransac_slope(
       sensitivity) and the final OLS is recovered in double identically in
       both engines.
 
-    ``strategy`` picks the physical plan (results identical — pytest):
-    - ``'batched'`` (default): hash-repartition by conv_id, ONE Arrow
-      transfer per partition, groups re-assembled pandas-side.  Grouped-map
-      applyInPandas pays a per-GROUP Arrow round-trip that dominates small
-      groups (measured 3.4-5.7s vs 0.7s for a trivial kernel over 1,500
-      groups at sf0.1 — per-group overhead, not compute).  Memory stays
-      bounded: every group is capped at ``max_obs_per_group`` rows and
-      partition count spreads conversations, so a partition holds
-      ~(n_convs/parallelism)*cap rows.
-    - ``'grouped'``: the plain applyInPandas surface, kept for parity
-      evidence and for kernels whose per-group state must not co-reside."""
+    Physical plan: hash-repartition by conv_id, ONE Arrow transfer per
+    partition, groups re-assembled pandas-side.  Grouped-map
+    applyInPandas pays a per-GROUP Arrow round-trip that dominates small
+    groups (measured 3.4-5.7s vs 0.7s for a trivial kernel over 1,500
+    groups at sf0.1 — per-group overhead, not compute).  Memory stays
+    bounded: every group is capped at ``max_obs_per_group`` rows and
+    partition count spreads conversations, so a partition holds
+    ~(n_convs/parallelism)*cap rows."""
     import numpy as np
     import pandas as pd
 
@@ -195,15 +191,6 @@ def ransac_slope(
         return [conv, round(m_f / 100, 6), round(b_f / 100, 6), k, n]
 
     cols = ["conv_id", "slope", "intercept", "n_inliers", "n_obs"]
-
-    if strategy == "grouped":
-
-        def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame([_fit_rows(pdf["conv_id"].iloc[0], pdf)], columns=cols)
-
-        return capped.groupBy("conv_id").applyInPandas(fit, RANSAC_SCHEMA)
-    if strategy != "batched":
-        raise ValueError(f"unknown strategy {strategy!r}")
 
     def fit_partition(batches):
         # one Arrow transfer per partition; bounded by cap * convs-per-

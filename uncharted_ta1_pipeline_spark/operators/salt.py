@@ -22,10 +22,10 @@ Physical plan: ONE full shuffle+sort on (conv_id, chunk) for the main
 window, one bounded shuffle on (conv_id, tool) for global tool
 first-occurrence, and broadcast joins for the tiny chunk-level tables.
 
-``featurize_salted`` returns exactly the same columns and values as
-``operators.windows.featurize`` (asserted in tests) — it is a physical
-strategy, not a semantic change.  ``featurize_hybrid`` routes only
-oversized conversations through it.
+``featurize_hybrid`` returns exactly the same columns and values as
+``operators.windows.featurize`` (asserted in tests) — salting is a
+physical strategy, not a semantic change — and routes only oversized
+conversations through the salted machinery.
 """
 
 from __future__ import annotations
@@ -43,46 +43,24 @@ def featurize_hybrid(
     chunk_size: int = DEFAULT_CHUNK,
     rolling_width: int = 5,
     gap_s: int = 1800,
-    narrow: bool = False,
-    single_pass: bool = True,
 ) -> DataFrame:
     """Route conversations by size: the few above ``hot_threshold`` turns
     take the chunked/salted path; everything else takes the plain
     single-shuffle window path.  Mirrors the reference's policy of tiling
     only oversized inputs (text_extractor.py:350-355: tile only when the
     image exceeds the pixel limit).  Same output as ``featurize`` for any
-    routing.
+    routing; ``hot_threshold=0`` salts every conversation.
 
-    ``single_pass`` (default): routing happens INSIDE one pass — rows carry
-    a broadcast hot flag and the salted machinery gives cold conversations
-    a constant chunk (no carries, no offsets), so the physical plan scans
-    the full-width input ONCE instead of once per branch.  ``False`` keeps
-    the two-branch union (2 full scans + an eager isEmpty()) for A/B.
-
-    ``narrow``: drop the ``text`` column — by far the widest, never an
-    input to any window function — BEFORE the window stages and join it
-    back by (conv_id, turn_idx) at the end, so window buffers hold only
-    the ~14 narrow feature columns.  Measured trade-off on this host
-    (12M-turn hybrid input, same-invocation A/B): wide 64.4s/26.1s vs
-    narrow 77.4s/32.1s at local[4]/local[16] — the re-join's extra
-    shuffle+sort of 12M text rows costs more than the narrower buffers
-    save, so the default is False; narrow scales slightly better
-    (0.72 vs 0.62 efficiency) and wins on window-dominated inputs
-    (small-conversation-only data measured 0.78 and fastest absolute at
-    16 cores), so it stays available per-call.  Exact same output either
-    way (asserted in tests/test_salt.py)."""
-    if narrow and "text" in df.columns:
-        feats = featurize_hybrid(
-            df.drop("text"),
-            hot_threshold=hot_threshold,
-            chunk_size=chunk_size,
-            rolling_width=rolling_width,
-            gap_s=gap_s,
-            narrow=False,
-            single_pass=single_pass,
-        )
-        return feats.join(
-            df.select("conv_id", "turn_idx", "text"), on=["conv_id", "turn_idx"]
+    Routing happens INSIDE one pass: rows carry a broadcast hot flag and
+    the salted machinery gives cold conversations a constant chunk (no
+    carries, no offsets), so the physical plan scans the full-width input
+    ONCE."""
+    if chunk_size <= rolling_width:
+        # boundary carries span exactly ONE chunk back; a chunk smaller than
+        # the rolling frame would silently miss rows from two chunks back
+        raise ValueError(
+            f"chunk_size ({chunk_size}) must exceed rolling_width "
+            f"({rolling_width}): tail carries only reach one chunk ahead"
         )
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
 
@@ -99,109 +77,52 @@ def featurize_hybrid(
     )
     # planning decision, evaluated eagerly like AQE's runtime stats: a tiny
     # aggregate-only action over a column-pruned scan, not a data collect —
-    # with no hot conversations BOTH strategies collapse to the plain
+    # with no hot conversations the plan collapses to the plain
     # single-window path (1 full scan, no explode overhead)
     if hot.isEmpty():
-        return featurize(df, rolling_width=rolling_width)
-    if single_pass:
-        # ONE full-width pass: cold conversations flow through the salted
-        # machinery with a constant chunk (≡ the plain per-conv window —
-        # same task shape, no carries), hot conversations get real chunks.
-        # Physical plan: 1 full-width scan (the output branch) + 1 narrow
-        # hot-only scan (chunk sums) + pruned conv_id scans for the dims —
-        # versus 3 full-input scans in the branched path.  At 100 TB the
-        # saved full-width passes dominate.
-        flagged = df.join(F.broadcast(hot), on="conv_id", how="left")
-        return featurize_salted(
-            flagged,
-            chunk_size=chunk_size,
-            rolling_width=rolling_width,
-            gap_s=gap_s,
-            hot_col="_hot",
-        )
-    # branched strategy (kept for A/B)
+        return featurize(df, rolling_width=rolling_width, gap_s=gap_s)
+    # ONE full-width pass: cold conversations flow through the salted
+    # machinery with a constant chunk (≡ the plain per-conv window — same
+    # task shape, no carries), hot conversations get real chunks.  Physical
+    # plan: 1 full-width scan (the output branch) + 1 narrow hot-only scan
+    # (chunk sums) + pruned conv_id scans for the dims.
     flagged = df.join(F.broadcast(hot), on="conv_id", how="left")
-    cold_f = featurize(
-        flagged.filter(F.col("_hot").isNull()).drop("_hot"),
-        rolling_width=rolling_width,
-    )
-    hot_f = featurize_salted(
-        flagged.filter(F.col("_hot")).drop("_hot"),
-        chunk_size=chunk_size,
-        rolling_width=rolling_width,
-        gap_s=gap_s,
-    )
-    return cold_f.unionByName(hot_f.select(*cold_f.columns))
+    return _featurize_salted(flagged, chunk_size, rolling_width, gap_s)
 
 
-def featurize_salted(
-    df: DataFrame,
-    chunk_size: int = DEFAULT_CHUNK,
-    rolling_width: int = 5,
-    gap_s: int = 1800,
-    hot_col: str | None = None,
-    firsts_join: str = "broadcast",
+def _featurize_salted(
+    df: DataFrame, chunk_size: int, rolling_width: int, gap_s: int
 ) -> DataFrame:
-    """Salted equivalent of ``operators.windows.featurize``.
-
-    ``firsts_join``: physical strategy for joining the per-(hot conv, tool)
-    first-occurrence dim back to the base scan.  ``"broadcast"`` (default)
-    is right whenever |hot conversations| x |tool vocabulary| rows fit an
-    executor (true at this sandbox's scale and for modest vocabularies);
-    at the 10^12-turn design point ~15M hot conversations x a 50-100-tool
-    vocabulary is ~10^9 dim rows — past any broadcast budget — so callers
-    there pass ``"shuffle"`` for a shuffled hash join (the base side pays
-    one extra exchange; the dim side is already shuffled by its groupBy).
-
-    Requires ``turn_idx`` to be the dense 0-based stable order within each
-    conversation (the ingest invariant), aligned with (ts, turn_idx) order.
-
-    ``hot_col``: optional boolean routing column (NULL ⇒ cold).  Cold
+    """Salted equivalent of ``operators.windows.featurize`` over a frame
+    carrying the boolean routing column ``_hot`` (NULL ⇒ cold).  Cold
     conversations take chunk 0 with NO boundary carries and NO offset rows
     — for them the bounded window degenerates to the plain per-conversation
     window, so hot and cold are featurized in the SAME single pass.
+
+    Requires ``turn_idx`` to be the dense 0-based stable order within each
+    conversation (the ingest invariant), aligned with (ts, turn_idx) order.
     """
-    if chunk_size <= rolling_width:
-        # boundary carries span exactly ONE chunk back; a chunk smaller than
-        # the rolling frame would silently miss rows from two chunks back
-        raise ValueError(
-            f"chunk_size ({chunk_size}) must exceed rolling_width "
-            f"({rolling_width}): tail carries only reach one chunk ahead"
-        )
     k = rolling_width
     cs = chunk_size
     non_empty = F.col("tool").isNotNull() & (F.col("tool") != "")
-    hot = (
-        F.coalesce(F.col(hot_col), F.lit(False)) if hot_col is not None else F.lit(True)
-    )
+    hot = F.coalesce(F.col("_hot"), F.lit(False))
 
     # Global first occurrence of each tool WITHOUT an unbounded window: a
     # (conv, tool) window group holds every use of one tool in one
     # conversation — 10^8 rows in ONE sort task for a single-tool hot
     # conversation.  Instead: hot conversations resolve their global first
-    # via a map-side-combined min-aggregate joined back as a dim of
-    # |hot| x |tool vocabulary| rows.  NOTE the vocabulary factor: unlike
-    # the conv_id-only hot flag, this dim is NOT broadcastable at every
-    # corpus size (15M hot convs x 50-100 tools overflows an executor) —
-    # hence the ``firsts_join`` escape hatch (ADVICE r3).  Cold
+    # via a map-side-combined min-aggregate joined back as a broadcast dim
+    # of |hot| x |tool vocabulary| rows.  NOTE the vocabulary factor: at the
+    # 10^12-turn design point (~15M hot convs x 50-100 tools) this dim
+    # outgrows a broadcast; no input this engine runs reaches that.  Cold
     # conversations keep the window but keyed by (conv, tool, _chunk),
     # whose groups the router bounds.
-    hot_src = (
-        df
-        if hot_col is None
-        else df.filter(F.coalesce(F.col(hot_col), F.lit(False)))
-    )
-    firsts = (
-        hot_src.filter(non_empty)
+    hot_rows = df.filter(hot)
+    firsts = F.broadcast(
+        hot_rows.filter(non_empty)
         .groupBy("conv_id", "tool")
         .agg(F.min(F.struct("ts", "turn_idx")).alias("_fp"))
     )
-    if firsts_join == "broadcast":
-        firsts = F.broadcast(firsts)
-    elif firsts_join == "shuffle":
-        firsts = firsts.hint("shuffle_hash")
-    else:
-        raise ValueError(f"firsts_join must be broadcast|shuffle: {firsts_join}")
 
     base = (
         df.withColumn("_us", F.unix_micros(F.col("ts")))
@@ -335,9 +256,6 @@ def featurize_salted(
     # prefixes are already global), so the offsets dim stays tiny and
     # broadcastable even with 10^8 cold convs.
     reals = a.filter(real)
-    sums_src = df
-    if hot_col is not None:
-        sums_src = sums_src.filter(F.coalesce(F.col(hot_col), F.lit(False)))
     # Session-start flags WITHOUT a whole-conversation window: within-chunk
     # gaps via a (conv, chunk)-bounded lag, and the chunk-boundary gap via
     # the tiny per-chunk summary (head vs previous chunk's tail) — the same
@@ -346,13 +264,13 @@ def featurize_salted(
     # old shape cost ~5s of 3-task tail on the 12M-turn bench).
     w_chunk_n = Window.partitionBy("conv_id", "_tgt").orderBy("ts", "turn_idx")
     nb = (
-        sums_src.select("conv_id", "ts", "turn_idx", "tool")
+        hot_rows.select("conv_id", "ts", "turn_idx", "tool")
         .withColumn("_us", F.unix_micros(F.col("ts")))
         .withColumn("_tgt", F.floor(F.col("turn_idx") / F.lit(cs)))
         .withColumn("_used", non_empty.cast("long"))
-        # sums_src is the hot slice, so every row resolves its global
+        # hot_rows is the hot slice, so every row resolves its global
         # first-use against the broadcast dim — no window needed here
-        .join(F.broadcast(firsts), on=["conv_id", "tool"], how="left")
+        .join(firsts, on=["conv_id", "tool"], how="left")
         .withColumn(
             "_first_use",
             ((F.struct("ts", "turn_idx") == F.col("_fp")) & non_empty).cast("long"),
@@ -430,7 +348,6 @@ def featurize_salted(
         "_us", "_chunk", "_used", "_first_use", "_t", "_tgt", "_kind", "_lag",
         "_p_turns", "_p_tools", "_p_firsts", "_p_ffill", "_p_sess", "_is_new",
         "_off_turns", "_off_tools", "_off_firsts", "_off_sess", "_carry_ffill",
+        "_hot",
     ]
-    if hot_col is not None:
-        drop.append(hot_col)
     return out.drop(*drop)

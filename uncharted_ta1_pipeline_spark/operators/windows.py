@@ -110,17 +110,18 @@ def with_ffill_tool(df: DataFrame) -> DataFrame:
     return df.withColumn("ffill_tool", F.last(non_empty, ignorenulls=True).over(w))
 
 
-def featurize(df: DataFrame, rolling_width: int = 5) -> DataFrame:
+def featurize(df: DataFrame, rolling_width: int = 5, gap_s: int = 1800) -> DataFrame:
     """The full per-turn feature stage: lag/lead + cumulative + rolling +
-    ffill + sessionization, in one pass (all windows share the same
-    partitioning, so Spark plans a single sort+shuffle on conv_id)."""
+    ffill + sessionization (a new session after a gap > ``gap_s``), in one
+    pass (all windows share the same partitioning, so Spark plans a single
+    sort+shuffle on conv_id)."""
     from uncharted_ta1_pipeline_spark.operators.sessionize import with_sessions
 
     out = with_lag_lead(df)
     out = with_cumulative(out)
     out = with_rolling(out, rolling_width)
     out = with_ffill_tool(out)
-    out = with_sessions(out)
+    out = with_sessions(out, gap_s)
     return out
 
 

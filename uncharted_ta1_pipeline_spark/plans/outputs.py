@@ -14,7 +14,7 @@ writer can rely on — not a Python object:
 | TabularOutput         | ordered ``select`` of declared fields           |
 | ObjectOutput          | non-key columns nested into a struct + to_json  |
 | ListOutput            | per-key ordered ``collect_list``                |
-| ImageOutput/ImageDict | binary payload column + typed metadata struct   |
+| ImageOutput/ImageDict | not reproduced (no media inputs)                |
 | BytesOutput           | binary payload + content sha / length           |
 | BaseModelOutput       | nested struct record + schema_version           |
 | BaseModelListOutput   | per-key ``collect_list`` of structs             |
@@ -99,17 +99,6 @@ def bytes_output(df: DataFrame, payload_col: str, key_cols: list[str]) -> DataFr
         F.length(F.col(payload_col)).alias("payload_len"),
         F.sha2(F.col(payload_col), 256).alias("payload_sha256"),
     )
-
-
-def image_output(df: DataFrame, payload_col: str, key_cols: list[str]) -> DataFrame:
-    """ImageOutput/ImageDictOutput: a BytesOutput whose payload is a media
-    blob with a typed metadata struct (media kind + declared dims), matching
-    the multimodal column convention (operators/multimodal.py)."""
-    out = bytes_output(df, payload_col, key_cols)
-    meta_cols = [c for c in df.columns if c.startswith("media_")]
-    if meta_cols:
-        out = out.join(df.select(*key_cols, *meta_cols), on=key_cols, how="left")
-    return out
 
 
 def model_output(
