@@ -9,8 +9,9 @@ output bit), and the degenerate-cluster index cap.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _emb(spark):
@@ -97,3 +98,18 @@ def test_ann_recall_floors(spark):
     assert mean["ivf_topk"] >= 0.3, mean
     # every (method, query) pair is present, hit counts bounded by k
     assert len(r) == 10 and (r["n_hit"] <= r["n_truth"]).all()
+
+
+@pytest.mark.parametrize("method", ["ann_lsh", "ivf_topk"])
+def test_ann_pairs_unique(spark, method):
+    """ann_recall left-joins the truth list against each method's approx
+    list; each truth row is counted once only if every
+    (query_id, neighbor_id) pair is unique within a method's list.  A
+    duplicate would inflate n_truth and corrupt recall silently."""
+    from uncharted_ta1_pipeline_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    df = getattr(similarity, method)(emb, n_queries=5, k=10)
+    n = df.count()
+    assert n > 0
+    assert df.select("query_id", "neighbor_id").distinct().count() == n

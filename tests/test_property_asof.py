@@ -32,11 +32,32 @@ conv_strategy = st.lists(
     min_size=1,
     max_size=12,
 )
-probe_strategy = st.lists(
-    st.integers(min_value=-60_000_000, max_value=560_000_000),
-    min_size=1,
-    max_size=6,
+probe_offset = st.integers(min_value=-60_000_000, max_value=560_000_000)
+probe_strategy = st.lists(probe_offset, min_size=1, max_size=6)
+
+# offsets of the first two 60 s and 3600 s bucket edges after BASE_US and
+# their 1 us neighbours: a small shared pool, so state rows, views and
+# probes land on equal timestamps and on both sides of bucket boundaries
+_EDGE_OFFSETS = sorted(
+    {
+        -BASE_US % (b * 1_000_000) + k * b * 1_000_000 + d
+        for b in (60, 3600)
+        for k in (0, 1)
+        for d in (-1, 0, 1)
+    }
 )
+tick_strategy = st.one_of(
+    st.integers(min_value=0, max_value=500_000_000), st.sampled_from(_EDGE_OFFSETS)
+)
+edge_conv_strategy = st.lists(
+    st.tuples(tick_strategy, st.integers(min_value=-5000, max_value=15000)),
+    min_size=1,
+    max_size=12,
+)
+edge_probe_strategy = st.lists(
+    st.one_of(probe_offset, st.sampled_from(_EDGE_OFFSETS)), min_size=1, max_size=6
+)
+bucket_strategy = st.sampled_from([None, 60, 3600])  # None: the plain path
 
 
 def _mk_frames(spark, conv, probes):
@@ -65,17 +86,21 @@ def _mk_frames(spark, conv, probes):
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(conv=conv_strategy, probes=probe_strategy)
-def test_asof_join_matches_bruteforce(spark, conv, probes):
-    from uncharted_ta1_pipeline_spark.operators.asof import asof_join
+@given(conv=edge_conv_strategy, probes=edge_probe_strategy, bucket=bucket_strategy)
+def test_asof_join_matches_bruteforce(spark, conv, probes, bucket):
+    from uncharted_ta1_pipeline_spark.operators.asof import (
+        asof_join,
+        asof_join_bucketed,
+    )
 
     obs, pr, rows, prows = _mk_frames(spark, conv, probes)
-    got = {
-        r.probe_id: r.turn_idx
-        for r in asof_join(
-            pr, obs, state_cols=["turn_idx"], state_tiebreak="turn_idx"
-        ).collect()
-    }
+    if bucket is None:
+        joined = asof_join(pr, obs, state_cols=["turn_idx"], state_tiebreak="turn_idx")
+    else:
+        joined = asof_join_bucketed(
+            pr, obs, state_cols=["turn_idx"], state_tiebreak="turn_idx", bucket_s=bucket
+        )
+    got = {r.probe_id: r.turn_idx for r in joined.collect()}
     for pid, _, pts in prows:
         past = [r for r in rows if r[5] <= pts]
         want = max(past, key=lambda r: (r[5], r[1]))[1] if past else None
@@ -147,25 +172,30 @@ def test_fit_predict_bucketed_equals_plain_property(spark, conv, probes, chunk, 
 
 view_strategy = st.lists(
     st.tuples(
-        st.integers(min_value=0, max_value=500_000_000),  # event ts offset
-        st.integers(min_value=0, max_value=9),            # payload token
+        tick_strategy,                         # event ts offset
+        st.integers(min_value=0, max_value=9),  # payload token
     ),
     min_size=0,
     max_size=8,
 )
 
 
-@given(view_a=view_strategy, view_b=view_strategy, probes=probe_strategy)
+@given(
+    view_a=view_strategy,
+    view_b=view_strategy,
+    probes=edge_probe_strategy,
+    bucket=bucket_strategy,
+)
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-def test_training_set_matches_bruteforce(spark, view_a, view_b, probes):
+def test_training_set_matches_bruteforce(spark, view_a, view_b, probes, bucket):
     """Every probe must pick up, per view, the payload of the latest event
     with ts <= probe_ts (ties broken by the later turn_idx), and the audit
     must equal the max matched event time — checked against a brute-force
-    python scan."""
+    python scan, on the plain path and at two bucket widths."""
     from uncharted_ta1_pipeline_spark.operators.feature_store import training_set
 
     def mk_view(name, rows):
@@ -188,6 +218,8 @@ def test_training_set_matches_bruteforce(spark, view_a, view_b, probes):
             ("b", mk_view("b", view_b), "ts", ["b_val"]),
         ],
         label_ts="label_ts",
+        strategy="plain" if bucket is None else "bucketed",
+        bucket_s=bucket or 86_400,
     ).collect()
     got = {r.probe_id: r for r in out}
     assert len(got) == len(probes)

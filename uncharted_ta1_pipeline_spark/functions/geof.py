@@ -155,59 +155,23 @@ def datum_shift(df: DataFrame) -> DataFrame:
     user anchor pass through unshifted (the reference keeps unshiftable
     points on the source datum).
 
-    r6: the anchor's signal rides INSIDE the nearest-neighbour window
-    structs (one tagged ffill/bfill pass — the nearest_join machinery with
-    ``signal`` carried in the tagged struct) instead of re-joining the
-    transcript twice on (conv, idx): same selected rows — turn_idx is
-    unique per conversation, so looking the anchor up by index and reading
-    its struct field are the same value — with the source subtree
-    evaluated once instead of three times and both joins gone.  The
-    scalar pandas UDF surface is unchanged."""
-    from pyspark.sql import Window
-
-    from uncharted_ta1_pipeline_spark.operators.windows import turn_order
+    The anchor's signal rides inside the nearest-neighbour window struct
+    (``joins._nearest_user_turn`` with ``signal`` carried) instead of
+    re-joining the transcript twice on (conv, idx): the source subtree is
+    evaluated once and no join is planned.  The scalar pandas UDF surface
+    is unchanged."""
+    from uncharted_ta1_pipeline_spark.operators.joins import _nearest_user_turn
 
     km_udf = _scalar_udfs()
-    us = F.unix_micros(F.col("ts"))
-    tagged = F.when(
-        F.col("role") == "user",
-        F.struct(F.col("turn_idx"), us.alias("us"), F.col("signal").alias("sig")),
-    )
-    w = turn_order()
-    prev_u = F.last(tagged, ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    next_u = F.first(tagged, ignorenulls=True).over(
-        w.rowsBetween(1, Window.unboundedFollowing)
-    )
-    d_prev = us - F.col("_prev.us")
-    d_next = F.col("_next.us") - us
-    pick = (
-        F.when(F.col("_prev").isNull(), F.col("_next"))
-        .when(F.col("_next").isNull(), F.col("_prev"))
-        .when(d_next < d_prev, F.col("_next"))
-        .otherwise(F.col("_prev"))  # tie -> earlier turn (nearest_join rule)
-    )
-    j = (
-        df.withColumn("_prev", prev_u)
-        .withColumn("_next", next_u)
-        .filter(F.col("role") == "tool")
-        .select(
-            "conv_id",
-            F.col("turn_idx").alias("tool_idx"),
-            pick["turn_idx"].alias("nearest_user_idx"),
-            F.col("signal").alias("_sig_t"),
-            pick["sig"].alias("_sig_u"),
-        )
-    )
+    j = _nearest_user_turn(df, carry=("signal",))
     lat_q = F.least(
-        F.greatest(F.floor(F.col("_sig_u")).cast("long"), F.lit(0)), F.lit(89)
+        F.greatest(F.floor(F.col("user_signal")).cast("long"), F.lit(0)), F.lit(89)
     )
     km = km_udf(F.coalesce(lat_q, F.lit(0)))
     shifted = F.round(
-        F.when(
-            F.col("_sig_u").isNull(), F.col("_sig_t")
-        ).otherwise(F.col("_sig_t") + km / F.lit(111.32) - F.lit(1.0)),
+        F.when(F.col("user_signal").isNull(), F.col("signal")).otherwise(
+            F.col("signal") + km / F.lit(111.32) - F.lit(1.0)
+        ),
         6,
     )
     return j.select(

@@ -1,87 +1,156 @@
 """Point-in-time (as-of) join — the engine's scaling-critical operator.
 
-Semantics: for each probe row ``(key, probe_ts)`` find the latest state row
-``(key, ts)`` with ``ts <= probe_ts`` (inclusive; ``strict=True`` gives
-``<``).  This is the transcript analog of the reference's predict-at-query-
-points step (/root/reference/tasks/geo_referencing/geo_projection.py:52-115:
-fit on keypoints, evaluate at probe pixels) and of the nearest-text dip
-lookup (/root/reference/tasks/point_extraction/point_orientation_extractor.py:262-271).
+Semantics: for each probe row ``(key, probe_ts)`` find, per state view, the
+latest state row ``(key, ts)`` with ``ts <= probe_ts``.  This is the
+transcript analog of the reference's predict-at-query-points step
+(tasks/geo_referencing/geo_projection.py:52-115: fit on keypoints, evaluate
+at probe pixels) and of its nearest-text dip lookup
+(tasks/point_extraction/point_orientation_extractor.py:262-271).
+
+One kernel, ``_asof``, does every as-of join in the engine: ``asof_join``
+and ``asof_join_bucketed`` are its one-view calls, ``fit_predict_at_probes``
+carries regression state through it, and ``feature_store.training_set``
+joins N feature views in one call.  The kernel unions the probes and every
+view into one stream and sorts it by ``(key, ts, tag, tiebreak)``:
+
+- view *i* gets tag *i* and probes get tag ``len(views)``, so at equal ts
+  every state row sorts before the probe (the ``<=`` rule), and with the
+  view's tiebreak (``turn_idx`` for transcripts — the stable turn order)
+  ``(ts, tag, tiebreak)`` is a total order across views;
+- each view's state is packed into its own struct column and carried
+  forward by ``last(ignorenulls)``; probe rows keep their carries.
 
 Two physical strategies, identical results:
 
-1. ``asof_join`` — union-and-window sort-merge: tag rows, sort by
-   ``(key, ts, tag, tiebreak)``, carry the last non-null packed state struct
-   forward, keep probe rows.  One shuffle on ``key``; the sort is exactly
-   the machinery a sort-merge join would use.  Window partitioning is
-   per-key, so a single hot key serializes.
+1. ``bucket_s=None`` — one window per key: one shuffle on ``key``, the sort
+   a sort-merge join would do.  A single hot key serializes.
+2. ``bucket_s=int`` — the explicit-salting path for hot conversations:
+   rows are range-bucketed by time within each key, carried within each
+   (key, bucket), and each bucket's closing state is carried into later
+   buckets by a second, one-row-per-bucket window.  The close is the
+   carry of the bucket's last row in the total order above, so it is one
+   row, never a stale one.  Two-level aggregation ≡ salting + unsalt.
 
-2. ``asof_join_bucketed`` — the explicit-salting path required by the
-   north_rule for hot conversations: rows are range-bucketed by time within
-   each key, the per-(key, bucket) closing state is computed, carried across
-   buckets with a *second* (tiny: one row per bucket) cumulative window, and
-   joined back so the final per-(key, bucket) window never sees more than a
-   bucket's rows.  Two-level aggregation ≡ salting + unsalt.
-
-Both avoid a naive range cross-join (probes × state) entirely.
-
-Determinism: ties among state rows at equal ts are broken by
-``state_tiebreak`` (``turn_idx`` for transcripts — the stable turn-ordering
-invariant), so results are identical at any parallelism.
+Neither builds a range cross-join (probes × state).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def _prep(
+def _asof(
     probes: DataFrame,
-    state: DataFrame,
+    views: list[tuple[DataFrame, str, list[str] | None]],
     key: str,
     probe_ts: str,
-    state_ts: str,
-    state_cols: list[str],
-    strict: bool,
-    state_tiebreak: str | None,
-):
-    """Union probes and state into one tagged, totally-ordered stream."""
-    # inclusive (<=): state sorts before probes at equal ts  -> state tag 0
-    # strict     (<): probes sort before state at equal ts   -> state tag 1
-    state_tag, probe_tag = (0, 1) if not strict else (1, 0)
-    tb = (
-        F.col(state_tiebreak).cast("long")
-        if state_tiebreak is not None
-        else F.lit(0).cast("long")
-    )
-    packed = state.select(
-        F.col(key).alias("_k"),
-        F.col(state_ts).alias("_ts"),
-        F.lit(state_tag).alias("_tag"),
-        tb.alias("_tb"),
-        F.struct(*[F.col(c) for c in state_cols]).alias("_state"),
-    )
-    probe_cols = list(probes.columns)
-    probed = probes.select(
-        F.col(key).alias("_k"),
-        F.col(probe_ts).alias("_ts"),
-        F.lit(probe_tag).alias("_tag"),
-        F.lit(0).cast("long").alias("_tb"),
-        F.lit(None).cast(packed.schema["_state"].dataType).alias("_state"),
-        F.struct(*[F.col(c) for c in probe_cols]).alias("_probe"),
-    )
-    packed = packed.withColumn(
-        "_probe", F.lit(None).cast(probed.schema["_probe"].dataType)
-    )
-    return packed.unionByName(probed), probe_cols, probe_tag
-
-
-def _unpack(
-    joined: DataFrame, probe_cols: list[str], state_cols: list[str], probe_tag: int
+    tiebreak: str,
+    bucket_s: int | None = None,
 ) -> DataFrame:
+    """Left as-of join of N state views onto ``probes``.
+
+    ``views``: list of ``(state_df, state_ts, state_cols)``; ``state_cols``
+    None means every column but the key and ts.  Returns every probe row
+    with its columns followed by each view's state columns, NULL when no
+    state row of that view precedes the probe."""
+    views = [
+        (df, ts, [c for c in df.columns if c not in (key, ts)])
+        if cols is None
+        else (df, ts, cols)
+        for df, ts, cols in views
+    ]
+    probe_tag = len(views)
+    probe_cols = list(probes.columns)
+    states = [F.struct(*[F.col(c) for c in cols]) for _, _, cols in views]
+    types = [df.select(s).schema[0].dataType for (df, _, _), s in zip(views, states)]
+    probe = F.struct(*[F.col(c) for c in probe_cols])
+    probe_t = probes.select(probe).schema[0].dataType
+
+    def tagged(df, ts, tag):
+        is_probe = tag == probe_tag
+        return df.select(
+            F.col(key).alias("_k"),
+            F.col(ts).alias("_ts"),
+            F.lit(tag).alias("_tag"),
+            (F.lit(0) if is_probe else F.col(tiebreak)).cast("long").alias("_tb"),
+            *[
+                (s if i == tag else F.lit(None).cast(t)).alias(f"_s{i}")
+                for i, (s, t) in enumerate(zip(states, types))
+            ],
+            (probe if is_probe else F.lit(None).cast(probe_t)).alias("_probe"),
+        )
+
+    unioned = reduce(
+        DataFrame.unionByName,
+        [tagged(df, ts, i) for i, (df, ts, _) in enumerate(views)]
+        + [tagged(probes, probe_ts, probe_tag)],
+    )
+    idx = range(len(views))
+    order = ("_ts", "_tag", "_tb")
+    if bucket_s is None:
+        w = (
+            Window.partitionBy("_k")
+            .orderBy(*order)
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        joined = unioned.select(
+            "*",
+            *[F.last(f"_s{i}", ignorenulls=True).over(w).alias(f"_c{i}") for i in idx],
+        )
+    else:
+        unioned = unioned.withColumn(
+            "_bkt",
+            F.floor(F.unix_micros(F.col("_ts")) / F.lit(bucket_s * 1_000_000)),
+        )
+        # level 1: within-bucket carry (window size bounded by bucket span)
+        w_in = (
+            Window.partitionBy("_k", "_bkt")
+            .orderBy(*order)
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        leveled = unioned.select(
+            "*",
+            *[
+                F.last(f"_s{i}", ignorenulls=True).over(w_in).alias(f"_in{i}")
+                for i in idx
+            ],
+        )
+        # level 2: closing state per (key, bucket), carried into LATER
+        # buckets.  Every (key, bucket) in the stream takes part, probe-only
+        # buckets too (their close is NULL).  Reading the close off the
+        # leveled frame makes both stream references the same window
+        # subtree, so the scan + union + shuffle below it is planned as ONE
+        # reused exchange instead of two evaluations.
+        w_bkts = (
+            Window.partitionBy("_k")
+            .orderBy("_bkt")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        carry_prev = leveled.groupBy("_k", "_bkt").agg(
+            *[F.max_by(f"_in{i}", F.struct(*order)).alias(f"_close{i}") for i in idx]
+        ).select(
+            "_k",
+            "_bkt",
+            *[
+                F.last(f"_close{i}", ignorenulls=True)
+                .over(w_bkts)
+                .alias(f"_prev{i}")
+                for i in idx
+            ],
+        )
+        joined = leveled.join(carry_prev, on=["_k", "_bkt"], how="left").select(
+            "*", *[F.coalesce(f"_in{i}", f"_prev{i}").alias(f"_c{i}") for i in idx]
+        )
     return joined.filter(F.col("_tag") == probe_tag).select(
         *[F.col(f"_probe.{c}").alias(c) for c in probe_cols],
-        *[F.col(f"_carry.{c}").alias(c) for c in state_cols],
+        *[
+            F.col(f"_c{i}.{c}").alias(c)
+            for i, (_, _, cols) in enumerate(views)
+            for c in cols
+        ],
     )
 
 
@@ -92,23 +161,13 @@ def asof_join(
     probe_ts: str = "probe_ts",
     state_ts: str = "ts",
     state_cols: list[str] | None = None,
-    strict: bool = False,
-    state_tiebreak: str | None = "turn_idx",
+    state_tiebreak: str = "turn_idx",
 ) -> DataFrame:
     """Left as-of join: every probe row survives; state columns are NULL
     when no state row precedes the probe (before-first-turn probes)."""
-    if state_cols is None:
-        state_cols = [c for c in state.columns if c not in (key, state_ts)]
-    unioned, probe_cols, probe_tag = _prep(
-        probes, state, key, probe_ts, state_ts, state_cols, strict, state_tiebreak
+    return _asof(
+        probes, [(state, state_ts, state_cols)], key, probe_ts, state_tiebreak
     )
-    w = (
-        Window.partitionBy("_k")
-        .orderBy("_ts", "_tag", "_tb")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    joined = unioned.withColumn("_carry", F.last("_state", ignorenulls=True).over(w))
-    return _unpack(joined, probe_cols, state_cols, probe_tag)
 
 
 def asof_join_bucketed(
@@ -118,8 +177,7 @@ def asof_join_bucketed(
     probe_ts: str = "probe_ts",
     state_ts: str = "ts",
     state_cols: list[str] | None = None,
-    strict: bool = False,
-    state_tiebreak: str | None = "turn_idx",
+    state_tiebreak: str = "turn_idx",
     bucket_s: int = 86_400,
 ) -> DataFrame:
     """Hot-key-safe as-of join via time-range bucketing (explicit salting).
@@ -128,54 +186,9 @@ def asof_join_bucketed(
     conversation with 10^8 turns is processed in ~uniform slices.  The
     cross-bucket carry is one row per (key, bucket) — negligible.
     """
-    if state_cols is None:
-        state_cols = [c for c in state.columns if c not in (key, state_ts)]
-    unioned, probe_cols, probe_tag = _prep(
-        probes, state, key, probe_ts, state_ts, state_cols, strict, state_tiebreak
+    return _asof(
+        probes, [(state, state_ts, state_cols)], key, probe_ts, state_tiebreak, bucket_s
     )
-    unioned = unioned.withColumn(
-        "_bkt", F.floor(F.unix_micros(F.col("_ts")) / F.lit(bucket_s * 1_000_000))
-    )
-
-    # level 1: within-bucket carry (window size bounded by bucket span)
-    w_in = (
-        Window.partitionBy("_k", "_bkt")
-        .orderBy("_ts", "_tag", "_tb")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    leveled = unioned.withColumn(
-        "_carry_in", F.last("_state", ignorenulls=True).over(w_in)
-    )
-
-    # level 2: closing state per (key, bucket), carried into LATER buckets.
-    # Every (key, bucket) present in the stream participates — including
-    # probe-only buckets, which would otherwise lose the carry.  The close
-    # is read off the LEVELED frame (the bucket's last row in (ts, tag,
-    # tiebreak) order carries exactly the bucket's last state — NULL for
-    # probe-only buckets, matching the old filtered-groupBy + left-join
-    # result): both stream references are then the identical window
-    # subtree, so the scan + union + shuffle below it is planned as ONE
-    # reused exchange instead of two independent evaluations (the r6
-    # subtree-multiplicity discipline; the r5 shape evaluated the tagged
-    # union three times).
-    w_bkts = (
-        Window.partitionBy("_k")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry_prev = (
-        leveled.groupBy("_k", "_bkt")
-        .agg(
-            F.max_by("_carry_in", F.struct("_ts", "_tag", "_tb")).alias("_close")
-        )
-        .withColumn("_carry_prev", F.last("_close", ignorenulls=True).over(w_bkts))
-        .select("_k", "_bkt", "_carry_prev")
-    )
-
-    joined = leveled.join(carry_prev, on=["_k", "_bkt"], how="left").withColumn(
-        "_carry", F.coalesce("_carry_in", "_carry_prev")
-    )
-    return _unpack(joined, probe_cols, state_cols, probe_tag)
 
 
 # ---------------------------------------------------------------------------
@@ -389,18 +402,14 @@ def fit_predict_at_probes(
         )
     else:
         raise ValueError(f"strategy must be plain|bucketed: {strategy}")
-    join_fn = asof_join if strategy == "plain" else (
-        lambda *a, **kw: asof_join_bucketed(*a, bucket_s=bucket_s, **kw)
-    )
-    joined = join_fn(
+    cols = ["first_us", "n_obs", "sx", "sy", "sxy", "sxx", tiebreak]
+    joined = _asof(
         probes,
-        state,
-        key=key,
-        probe_ts=probe_ts,
-        state_ts=obs_ts,
-        state_cols=["first_us", "n_obs", "sx", "sy", "sxy", "sxx", tiebreak],
-        strict=False,
-        state_tiebreak=tiebreak,
+        [(state, obs_ts, cols)],
+        key,
+        probe_ts,
+        tiebreak,
+        bucket_s if strategy == "bucketed" else None,
     )
     # double-precision finish: identical expression tree in the oracle
     n = F.col("n_obs").cast("double")

@@ -34,6 +34,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from uncharted_ta1_pipeline_spark.operators.asof import _asof
 
 
 def training_set(
@@ -43,24 +44,25 @@ def training_set(
     label_ts: str = "label_ts",
     strategy: str = "plain",
     bucket_s: int = 86_400,
-    state_tiebreak: str | None = "turn_idx",
-    audit: bool = True,
 ) -> DataFrame:
-    """Point-in-time training set: sequential as-of joins of each feature
-    view onto the labels table.
+    """Point-in-time training set: every feature view as-of joined onto the
+    labels table in ONE pass of the as-of kernel (operators/asof.py).
 
     ``feature_views``: list of (name, view_df, view_ts_col, feature_cols).
     Each view contributes its feature_cols plus an automatic
     ``{name}_ts_us`` (the matched event time, for the audit).  Feature
     column names must be distinct across views — the same contract every
-    feature store imposes on a joined feature vector.
+    feature store imposes on a joined feature vector.  Every view carries
+    ``turn_idx``, which breaks ties at equal event time.
 
-    ``strategy='bucketed'`` routes every join through the hot-key-safe
-    time-bucketed as-of (explicit salting; see asof_join_bucketed).
+    ``strategy='bucketed'`` runs the kernel's hot-key-safe time-bucketed
+    path (explicit salting; see asof_join_bucketed).
 
-    Scale: each view adds one union-window as-of join shuffled on the SAME
-    entity key, so the exchanges are co-partitioned; N views = N bounded
-    passes, never a per-label loop.  The audit is a pure projection.
+    Scale: the labels and every view enter one tagged union, shuffled once
+    on the entity key and carried by one window pass; each view's state is
+    its own packed column.  The plan holds the same number of stream
+    references whatever the number of views, never a per-label loop.  The
+    audit (``max_feature_ts_us``, ``leak_ok``) is a pure projection.
     """
     seen: set[str] = set(labels.columns)
     for name, _, _, cols in feature_views:
@@ -71,134 +73,31 @@ def training_set(
     if strategy not in ("plain", "bucketed"):
         raise ValueError(f"strategy must be plain|bucketed: {strategy}")
 
-    # ONE tagged union + ONE window pass carrying every view's state in
-    # its own packed column, instead of sequentially chaining one as-of
-    # join per view.  The sequential form nested each join's two
-    # stream references, so with V views the labels/view subtrees were
-    # re-evaluated O(2^V) times (14 source scans for V=2 bucketed at r5);
-    # here each input enters the union once and the whole plan holds
-    # 2 stream references (output + bucket-closes), independent of V.
-    # Results are identical: per-view carries are independent columns over
-    # the same (ts, tag, tiebreak) total order the sequential joins used,
-    # and extra buckets contributed by OTHER views to the bucket chain
-    # carry NULL closes for this view, which last(ignorenulls) skips.
     ts_cols = [f"{name}_ts_us" for name, _, _, _ in feature_views]
-    packed, types = [], []
-    for i, (name, view, view_ts, cols) in enumerate(feature_views):
-        view = view.withColumn(f"{name}_ts_us", F.unix_micros(F.col(view_ts)))
-        st_cols = list(cols) + [f"{name}_ts_us"]
-        tb = (
-            F.col(state_tiebreak).cast("long")
-            if state_tiebreak is not None and state_tiebreak in view.columns
-            else F.lit(0).cast("long")
+    views = [
+        (
+            view.withColumn(ts_col, F.unix_micros(F.col(view_ts))),
+            view_ts,
+            [*cols, ts_col],
         )
-        f = view.select(
-            F.col(key).alias("_k"),
-            F.col(view_ts).alias("_ts"),
-            F.lit(0).alias("_tag"),
-            tb.alias("_tb"),
-            F.struct(*[F.col(c) for c in st_cols]).alias(f"_s{i}"),
-        )
-        packed.append(f)
-        types.append((f.schema[f"_s{i}"].dataType, st_cols))
-    probe_cols = list(labels.columns)
-    probed = labels.select(
-        F.col(key).alias("_k"),
-        F.col(label_ts).alias("_ts"),
-        F.lit(1).alias("_tag"),
-        F.lit(0).cast("long").alias("_tb"),
-        F.struct(*[F.col(c) for c in probe_cols]).alias("_probe"),
+        for (_, view, view_ts, cols), ts_col in zip(feature_views, ts_cols)
+    ]
+    out = _asof(
+        labels,
+        views,
+        key,
+        label_ts,
+        "turn_idx",
+        bucket_s if strategy == "bucketed" else None,
     )
-    probe_t = probed.schema["_probe"].dataType
-    frames = []
-    for i, f in enumerate(packed):
-        for j, (t, _) in enumerate(types):
-            if j != i:
-                f = f.withColumn(f"_s{j}", F.lit(None).cast(t))
-        frames.append(f.withColumn("_probe", F.lit(None).cast(probe_t)))
-    pr = probed
-    for j, (t, _) in enumerate(types):
-        pr = pr.withColumn(f"_s{j}", F.lit(None).cast(t))
-    unioned = frames[0]
-    for f in frames[1:] + [pr]:
-        unioned = unioned.unionByName(f)
-
-    if strategy == "plain":
-        w = (
-            Window.partitionBy("_k")
-            .orderBy("_ts", "_tag", "_tb")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        joined = unioned
-        for i in range(len(types)):
-            joined = joined.withColumn(
-                f"_c{i}", F.last(f"_s{i}", ignorenulls=True).over(w)
-            )
-    else:
-        unioned = unioned.withColumn(
-            "_bkt",
-            F.floor(F.unix_micros(F.col("_ts")) / F.lit(bucket_s * 1_000_000)),
-        )
-        w_in = (
-            Window.partitionBy("_k", "_bkt")
-            .orderBy("_ts", "_tag", "_tb")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        leveled = unioned
-        for i in range(len(types)):
-            leveled = leveled.withColumn(
-                f"_in{i}", F.last(f"_s{i}", ignorenulls=True).over(w_in)
-            )
-        w_bkts = (
-            Window.partitionBy("_k")
-            .orderBy("_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        closes = unioned.groupBy("_k", "_bkt").agg(
-            *[
-                F.max_by(
-                    f"_s{i}",
-                    F.when(F.col(f"_s{i}").isNotNull(), F.struct("_ts", "_tb")),
-                ).alias(f"_close{i}")
-                for i in range(len(types))
-            ]
-        )
-        carry_prev = closes.select(
-            "_k",
-            "_bkt",
-            *[
-                F.last(f"_close{i}", ignorenulls=True)
-                .over(w_bkts)
-                .alias(f"_prev{i}")
-                for i in range(len(types))
-            ],
-        )
-        joined = leveled.join(carry_prev, on=["_k", "_bkt"], how="left")
-        for i in range(len(types)):
-            joined = joined.withColumn(
-                f"_c{i}", F.coalesce(f"_in{i}", f"_prev{i}")
-            )
-
-    out = joined.filter(F.col("_tag") == 1).select(
-        *[F.col(f"_probe.{c}").alias(c) for c in probe_cols],
-        *[
-            F.col(f"_c{i}.{c}").alias(c)
-            for i, (_, st_cols) in enumerate(types)
-            for c in st_cols
-        ],
+    mx = F.greatest(*ts_cols) if len(ts_cols) > 1 else F.col(ts_cols[0])
+    return out.withColumn("max_feature_ts_us", mx).withColumn(
+        "leak_ok",
+        F.coalesce(
+            F.col("max_feature_ts_us") <= F.unix_micros(F.col(label_ts)),
+            F.lit(True),  # no matched feature at all — vacuously safe
+        ),
     )
-    if audit:
-        mx = (
-            F.greatest(*ts_cols) if len(ts_cols) > 1 else F.col(ts_cols[0])
-        )
-        out = out.withColumn("max_feature_ts_us", mx).withColumn(
-            "leak_ok",
-            F.coalesce(
-                F.col("max_feature_ts_us") <= F.unix_micros(F.col(label_ts)),
-                F.lit(True),  # no matched feature at all — vacuously safe
-            ),
-        )
-    return out
 
 
 def target_encode_bucketed(

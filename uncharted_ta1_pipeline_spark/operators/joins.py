@@ -197,27 +197,41 @@ def point_geocoder(df: DataFrame, margin: float = 0.1, k: int = 4) -> DataFrame:
     )
 
 
-def nearest_join(df: DataFrame) -> DataFrame:
-    """For each 'tool' turn, the nearest 'user' turn in time within the
-    conversation (≈ nearest-OCR-text dip lookup,
-    /root/reference/tasks/point_extraction/point_orientation_extractor.py:262-271).
+def _nearest_user_turn(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Tool turns of ``df`` with the nearest user turn in time within the
+    conversation: ``conv_id``, ``tool_idx``, ``nearest_user_idx`` and
+    ``nearest_gap_s``, then each ``carry`` column twice — the tool turn's
+    own value under its name, the user turn's as ``user_<col>``.  Ties go
+    to the earlier turn.
 
     No cross join: one ordered window pass computes the previous and next
-    user turn for every row (ffill/bfill of tagged neighbours), then picks
-    the nearer — O(n log n), hot-key-safe via the same chunking as salt.py
-    if ever needed."""
+    user turn for every row (ffill/bfill of tagged neighbours, the carried
+    columns riding in the same struct), then picks the nearer —
+    O(n log n), hot-key-safe via the same chunking as salt.py if ever
+    needed."""
     us = F.unix_micros(F.col("ts"))
+    tagged = F.when(
+        F.col("role") == "user",
+        F.struct(F.col("turn_idx"), us.alias("us"), *[F.col(c) for c in carry]),
+    )
     w = turn_order()
-    prev_u = F.last(
-        F.when(F.col("role") == "user", F.struct(F.col("turn_idx"), us.alias("us"))),
-        ignorenulls=True,
-    ).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    next_u = F.first(
-        F.when(F.col("role") == "user", F.struct(F.col("turn_idx"), us.alias("us"))),
-        ignorenulls=True,
-    ).over(w.rowsBetween(1, Window.unboundedFollowing))
+    prev_u = F.last(tagged, ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    next_u = F.first(tagged, ignorenulls=True).over(
+        w.rowsBetween(1, Window.unboundedFollowing)
+    )
     d_prev = us - F.col("_prev.us")
     d_next = F.col("_next.us") - us
+
+    def pick(field: str):
+        return (
+            F.when(F.col("_prev").isNull(), F.col(f"_next.{field}"))
+            .when(F.col("_next").isNull(), F.col(f"_prev.{field}"))
+            .when(d_next < d_prev, F.col(f"_next.{field}"))
+            .otherwise(F.col(f"_prev.{field}"))  # tie -> earlier turn
+        )
+
     return (
         df.withColumn("_prev", prev_u)
         .withColumn("_next", next_u)
@@ -225,11 +239,7 @@ def nearest_join(df: DataFrame) -> DataFrame:
         .select(
             "conv_id",
             F.col("turn_idx").alias("tool_idx"),
-            F.when(F.col("_prev").isNull(), F.col("_next.turn_idx"))
-            .when(F.col("_next").isNull(), F.col("_prev.turn_idx"))
-            .when(d_next < d_prev, F.col("_next.turn_idx"))
-            .otherwise(F.col("_prev.turn_idx"))  # tie -> earlier turn
-            .alias("nearest_user_idx"),
+            pick("turn_idx").alias("nearest_user_idx"),
             F.round(
                 F.when(F.col("_prev").isNull(), d_next)
                 .when(F.col("_next").isNull(), d_prev)
@@ -237,5 +247,15 @@ def nearest_join(df: DataFrame) -> DataFrame:
                 / F.lit(1000000.0),
                 6,
             ).alias("nearest_gap_s"),
+            *carry,
+            *[pick(c).alias(f"user_{c}") for c in carry],
         )
     )
+
+
+def nearest_join(df: DataFrame) -> DataFrame:
+    """For each 'tool' turn, the nearest 'user' turn in time within the
+    conversation (≈ nearest-OCR-text dip lookup,
+    tasks/point_extraction/point_orientation_extractor.py:262-271 in the
+    reference)."""
+    return _nearest_user_turn(df)

@@ -45,26 +45,61 @@ def config_hash(config: dict) -> str:
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
+def _stage_hash(stage_id: str, config: dict | None, n_buckets: int) -> str:
+    """The config hash a stage's manifests are keyed by."""
+    return config_hash(
+        {**(config or {}), "_stage_id": stage_id, "_n_buckets": n_buckets}
+    )
+
+
 def _manifest_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def committed_buckets(out_dir: str, cfg_hash: str) -> dict[int, dict]:
-    """Read committed manifest rows matching the config hash."""
+def _commit_json(out_dir: str, name: str, obj: dict) -> None:
+    """Write ``obj`` to ``_manifest/<name>`` atomically (tmp file + rename),
+    so a reader never sees a half-written record."""
+    mdir = _manifest_dir(out_dir)
+    os.makedirs(mdir, exist_ok=True)
+    tmp = os.path.join(mdir, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, os.path.join(mdir, name))  # atomic commit point
+
+
+def _records(out_dir: str, cfg_hash: str, prefix: str) -> dict[int, dict]:
+    """Per-bucket ``<prefix>-<b>.json`` records matching the config hash.
+    Commit (``bucket-``) and quarantine (``poison-``) records share the
+    directory and the config hash; the prefix keeps them apart."""
     mdir = _manifest_dir(out_dir)
     out: dict[int, dict] = {}
     if not os.path.isdir(mdir):
         return out
     for name in os.listdir(mdir):
-        # ONLY commit records: poison-*.json quarantine rows share the
-        # directory and the config_hash but must never count as committed
-        if not (name.startswith("bucket-") and name.endswith(".json")):
+        if not (name.startswith(f"{prefix}-") and name.endswith(".json")):
             continue
         with open(os.path.join(mdir, name)) as f:
             row = json.load(f)
         if row.get("config_hash") == cfg_hash:
             out[int(row["bucket"])] = row
     return out
+
+
+def committed_buckets(out_dir: str, cfg_hash: str) -> dict[int, dict]:
+    """Read committed manifest rows matching the config hash."""
+    return _records(out_dir, cfg_hash, "bucket")
+
+
+def poisoned_buckets(out_dir: str, cfg_hash: str) -> dict[int, dict]:
+    """Read poison records matching the config hash."""
+    return _records(out_dir, cfg_hash, "poison")
+
+
+def _has_bucket_dirs(out_dir: str) -> bool:
+    """Whether any ``bucket=K/`` data partition was written."""
+    return os.path.isdir(out_dir) and any(
+        name.startswith("bucket=") for name in os.listdir(out_dir)
+    )
 
 
 def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -121,11 +156,7 @@ def write_stage(
     limits the write to a subset of pending buckets (the per-bucket
     fault-isolation path of ``write_stage_resilient``)."""
     t0 = time.time()
-    cfg = dict(config or {})
-    cfg["_stage_id"] = stage_id
-    cfg["_n_buckets"] = n_buckets
-    h = config_hash(cfg)
-
+    h = _stage_hash(stage_id, config, n_buckets)
     done = committed_buckets(out_dir, h)
     pending = [
         b
@@ -140,12 +171,7 @@ def write_stage(
         # ZERO rows — no bucket=K/ dirs, nothing for parquet to infer —
         # still reads back as an empty frame with the right schema instead
         # of UNABLE_TO_INFER_SCHEMA killing the resume path
-        mdir = _manifest_dir(out_dir)
-        os.makedirs(mdir, exist_ok=True)
-        stmp = os.path.join(mdir, f".schema-{h}.json.tmp")
-        with open(stmp, "w") as f:
-            json.dump(df.schema.jsonValue(), f)
-        os.replace(stmp, os.path.join(mdir, f"schema-{h}.json"))
+        _commit_json(out_dir, f"schema-{h}.json", df.schema.jsonValue())
         bdf = _bucketed(df, n_buckets)
         if len(pending) < n_buckets:
             bdf = bdf.filter(F.col("bucket").isin(pending))
@@ -160,17 +186,12 @@ def write_stage(
         # all) — only THAT case may commit row_count=0 manifests; any other
         # read-back failure must propagate so unverified buckets are never
         # marked committed.
-        has_data = any(
-            name.startswith("bucket=") for name in os.listdir(out_dir)
-        ) if os.path.isdir(out_dir) else False
-        if has_data:
+        if _has_bucket_dirs(out_dir):
             sums = _bucket_checksums(
                 spark.read.parquet(out_dir).filter(F.col("bucket").isin(pending))
             )
         else:
             sums = {}  # stage produced zero rows: every bucket is empty
-        mdir = _manifest_dir(out_dir)
-        os.makedirs(mdir, exist_ok=True)
         now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         for b in pending:
             meta = sums.get(b, {"row_count": 0, "checksum": "0"})
@@ -182,11 +203,7 @@ def write_stage(
                 "committed_at": now,
                 **meta,
             }
-            tmp = os.path.join(mdir, f".bucket-{b}.json.tmp")
-            dst = os.path.join(mdir, f"bucket-{b}.json")
-            with open(tmp, "w") as f:
-                json.dump(row, f)
-            os.replace(tmp, dst)  # atomic commit point
+            _commit_json(out_dir, f"bucket-{b}.json", row)
     return StageResult(
         stage_id=stage_id,
         config_hash=h,
@@ -197,22 +214,6 @@ def write_stage(
         rows_out=rows_out,
         wall_ms=int((time.time() - t0) * 1000),
     )
-
-
-def poisoned_buckets(out_dir: str, cfg_hash: str) -> dict[int, dict]:
-    """Read poison records matching the config hash."""
-    mdir = _manifest_dir(out_dir)
-    out: dict[int, dict] = {}
-    if not os.path.isdir(mdir):
-        return out
-    for name in os.listdir(mdir):
-        if not (name.startswith("poison-") and name.endswith(".json")):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            row = json.load(f)
-        if row.get("config_hash") == cfg_hash:
-            out[int(row["bucket"])] = row
-    return out
 
 
 def _clear_poison(out_dir: str, bucket: int) -> None:
@@ -247,10 +248,7 @@ def write_stage_resilient(
     ``df_fn``: the stage DataFrame or a zero-arg callable producing it
     (re-invoked per attempt so transient failures can heal)."""
     t0 = time.time()
-    cfg = dict(config or {})
-    cfg["_stage_id"] = stage_id
-    cfg["_n_buckets"] = n_buckets
-    h = config_hash(cfg)
+    h = _stage_hash(stage_id, config, n_buckets)
     make = df_fn if callable(df_fn) else (lambda: df_fn)
 
     try:
@@ -264,7 +262,6 @@ def write_stage_resilient(
     done = committed_buckets(out_dir, h)
     pending = [b for b in range(n_buckets) if b not in done]
     computed, rows_out, poisoned = 0, 0, 0
-    mdir = _manifest_dir(out_dir)
     for b in pending:
         last_err: str | None = None
         for _ in range(max_attempts):
@@ -281,7 +278,6 @@ def write_stage_resilient(
                 last_err = f"{type(ex).__name__}: {ex}"
         if last_err is not None:
             poisoned += 1
-            os.makedirs(mdir, exist_ok=True)
             row = {
                 "stage_id": stage_id,
                 "config_hash": h,
@@ -290,11 +286,7 @@ def write_stage_resilient(
                 "error": last_err[:2000],
                 "poisoned_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
-            tmp = os.path.join(mdir, f".poison-{b}.json.tmp")
-            dst = os.path.join(mdir, f"poison-{b}.json")
-            with open(tmp, "w") as f:
-                json.dump(row, f)
-            os.replace(tmp, dst)
+            _commit_json(out_dir, f"poison-{b}.json", row)
     return StageResult(
         stage_id=stage_id,
         config_hash=h,
@@ -317,10 +309,7 @@ def read_stage(
     require_complete: bool = True,
 ) -> DataFrame:
     """Read back a committed stage (only manifest-committed buckets)."""
-    cfg = dict(config or {})
-    cfg["_stage_id"] = stage_id
-    cfg["_n_buckets"] = n_buckets
-    h = config_hash(cfg)
+    h = _stage_hash(stage_id, config, n_buckets)
     done = committed_buckets(out_dir, h)
     if require_complete and len(done) < n_buckets:
         missing = sorted(set(range(n_buckets)) - set(done))
@@ -328,9 +317,7 @@ def read_stage(
             f"stage {stage_id}: {len(missing)} uncommitted buckets {missing[:8]}..."
         )
     schema_path = os.path.join(_manifest_dir(out_dir), f"schema-{h}.json")
-    if not any(
-        name.startswith("bucket=") for name in os.listdir(out_dir)
-    ) and os.path.isfile(schema_path):
+    if not _has_bucket_dirs(out_dir) and os.path.isfile(schema_path):
         # all committed buckets are empty (write_stage commits row_count=0
         # manifests): reconstruct the empty frame from the saved schema
         from pyspark.sql.types import StructType
