@@ -7,6 +7,8 @@ joins for small sides, and whole-stage codegen coverage."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_SMOKE
@@ -17,19 +19,23 @@ def _plan(df) -> str:
 
 
 def test_featurize_single_partitioning_exchanges(spark):
-    """Plain featurize: all per-conv windows share ONE (conv_id) exchange;
-    the only other exchange is the (conv_id, tool) first-occurrence window."""
+    """Plain featurize over the ingest is one sorted pass per conversation:
+    every window is keyed on conv_id, so the ingest's conv_id exchange is
+    the only one.  Sorts: ingest (ts, event_id), the (conv_id, tool)
+    first-use flag, and the fused (ts, turn_idx) run.  Windows: those
+    three plus the session count, which needs a second level over the
+    fused run's lag but no new sort."""
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     df = featurize(load_transcripts(spark, SF_SMOKE))
     plan = _plan(df)
     n_exchanges = plan.count("Exchange hashpartitioning")
-    # Measured: exactly 2 — one for conv_id (ALL per-conv windows including
-    # the (conv_id, tool) first-occurrence window reuse its clustering) and
-    # one for the user_id row_number in the transcripts derivation.  More
-    # means a window spec stopped sharing its partitioning.
-    assert n_exchanges <= 3, f"window exchanges regressed: {n_exchanges}\n{plan[:2000]}"
+    n_sorts = len(re.findall(r"\bSort \[", plan))
+    n_windows = len(re.findall(r"\bWindow \[", plan))
+    assert n_exchanges == 1, f"exchanges: {n_exchanges}\n{plan[:3000]}"
+    assert n_sorts <= 3, f"sorts: {n_sorts}\n{plan[:3000]}"
+    assert n_windows <= 4, f"window operators: {n_windows}\n{plan[:3000]}"
     # codegen coverage is only visible on the finalized adaptive plan of
     # THIS DataFrame's QueryExecution — run an action through it first
     df.collect()
@@ -161,23 +167,16 @@ def test_regression_state_bucketed_fused_plan(spark):
     assert n_exchanges <= 5, f"state-pass exchanges regressed: {n_exchanges}\n{final[:2000]}"
 
 
-def test_median_mad_single_fused_grouped_agg_udf(spark):
-    """grouped_median_mad ships ONE fused grouped-agg pandas UDF (the
-    [n, med, mad] array) per group: ArrowAggregatePython dispatches the
-    Python function once per GROUP per UDF, so with many small groups the
-    call count — not the histogram volume — is the dominant cost (r6
-    measured 2.07 -> 1.75 s at sf0.1 fusing the old count/median/mad
-    trio).  A regression back to multiple grouped-agg UDFs triples the
-    per-group dispatch."""
+def test_median_mad_no_python(spark):
+    """grouped_median_mad is built-in frequency-weighted ``percentile``
+    aggregates over a per-conv histogram: no Python node in its plan (it
+    was a grouped-agg pandas UDF, dispatched once per group)."""
     from uncharted_ta1_pipeline_spark.functions.geof import grouped_median_mad
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     plan = _plan(grouped_median_mad(load_transcripts(spark, SF_SMOKE)))
-    assert "ArrowAggregatePython" in plan, plan[:2000]
-    assert "median_mad_udf" in plan, plan[:2000]
-    rest = plan.replace("median_mad_udf", "")
-    for stale in ("count_udf", "median_udf(", "mad_udf("):
-        assert stale not in rest, f"unfused grouped-agg UDF {stale}:\n{plan[:2000]}"
+    assert "percentile(" in plan, plan[:2000]
+    assert not re.search(r"Python|InPandas", plan), plan[:2000]
 
 
 def test_ann_recall_truth_single_pass(spark):

@@ -9,6 +9,8 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import numpy as np
+import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -246,3 +248,59 @@ def test_training_set_matches_bruteforce(spark, view_a, view_b, probes, bucket):
         )
         assert r.max_feature_ts_us == want_max
         assert r.leak_ok is True
+
+
+class _TieAdversarialF:
+    """``pyspark.sql.functions`` with one change: ``max_by`` resolves ties
+    in its ordering toward a row whose value is NULL.
+
+    Spark does not specify which of several rows with an equal ordering
+    ``max_by`` returns; in practice it keeps the last one it reads, and
+    the last row of a bucket carries every view's state, which hides any
+    tie between views.  The kernel's bucket close must not depend on that
+    choice: ``(ts, tag, tiebreak)`` is a total order across views, so the
+    close's maximum is one row.  Patched into ``operators.asof``, this
+    makes a tie between two views' rows pick the row whose carry of the
+    other view is still NULL."""
+
+    def __getattr__(self, name):
+        return getattr(F, name)
+
+    @staticmethod
+    def max_by(col, ordering):
+        return F.max_by(col, F.struct(ordering, F.isnull(col)))
+
+
+@pytest.mark.parametrize("bucket", [60, 3600])
+@pytest.mark.parametrize("a_first", [True, False], ids=["ab", "ba"])
+def test_training_set_close_ignores_tie_order(spark, monkeypatch, bucket, a_first):
+    """Views a and b each hold one event at the same ts and turn_idx, one
+    bucket before the probe: each view's value must reach the probe
+    through the bucket close, whichever tied row ``max_by`` keeps.  Fails
+    if the views share a tag."""
+    from uncharted_ta1_pipeline_spark.operators import asof
+    from uncharted_ta1_pipeline_spark.operators.feature_store import training_set
+
+    monkeypatch.setattr(asof, "F", _TieAdversarialF())
+    event = _ts(BASE_US)
+    views = {
+        name: spark.createDataFrame(
+            [("c1", event, 0, f"{name}0")],
+            f"conv_id string, ts timestamp, turn_idx int, {name}_val string",
+        )
+        for name in "ab"
+    }
+    order = "ab" if a_first else "ba"
+    labels = spark.createDataFrame(
+        [("p0", "c1", _ts(BASE_US + 2 * bucket * 1_000_000))],
+        "probe_id string, conv_id string, label_ts timestamp",
+    )
+    (row,) = training_set(
+        labels,
+        [(n, views[n], "ts", [f"{n}_val"]) for n in order],
+        label_ts="label_ts",
+        strategy="bucketed",
+        bucket_s=bucket,
+    ).collect()
+    assert (row.a_val, row.b_val) == ("a0", "b0")
+    assert row.max_feature_ts_us == BASE_US

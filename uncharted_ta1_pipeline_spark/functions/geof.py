@@ -1,7 +1,5 @@
-"""Vectorized pandas-UDF surfaces (SURVEY.md §2.9).
-
-Two of the four declared UDF surfaces of the engine live here — the two the
-grouped-map/mapInPandas operators don't exercise:
+"""Geodesic helpers: the scalar pandas UDF surface and an exact grouped
+median/MAD.
 
 - **scalar pandas_udf** (Series -> Series): the geodesic deg-per-km helper —
   the transcript analog of the reference's geopy destination-point scale
@@ -12,12 +10,11 @@ grouped-map/mapInPandas operators don't exercise:
   (georeference.py:164-174: a deterministic scalar CRS transform applied
   after the join — same vectorized-transform-on-joined-rows surface).
 
-- **grouped-agg pandas_udf**: exact per-group median / MAD over the
+- **grouped median / MAD**: exact per-group median / MAD over the
   centi-quantized signal (≈ the MAD residual statistic of OutlierFilter,
-  outlier_filter.py:246-261, as a reusable aggregate).  numpy's
-  interpolated median over int64 input is bit-identical to DuckDB's
-  ``median``/``mad`` (verified: both average the two middle values in
-  exact binary fractions).
+  outlier_filter.py:246-261, as a reusable aggregate).  It is the
+  built-in frequency-weighted ``percentile`` chain ``mad_outliers`` uses
+  (``operators.outliers._median_mad2``), so no Python runs in its plan.
 
 Determinism discipline: the latitude→km table is CONSTANT-FOLDED in Python
 (rounded to 6 decimals) and shared verbatim with the DuckDB oracle as a SQL
@@ -28,14 +25,6 @@ The UDF objects are constructed LAZILY (inside the operator functions):
 ``pandas_udf`` resolves its return type against the active SparkSession, so
 module import must stay session-free (the oracle generator imports this
 module for the shared table constant before any session exists).
-
-Skew note: grouped-agg pandas UDFs pull one group per invocation — the
-median/MAD aggregates therefore run over a pre-reduced per-conversation
-(value, count) histogram (map-side-combined groupBy), so the buffer one
-group ships through Arrow is bounded by the signal's centi-unit value
-range, not by conversation length; a 10^12-turn corpus's hottest
-conversation costs the same as a normal one.  (The cap/salt policy in
-salt.py remains the lever for per-ROW grouped kernels like ransac_slope.)
 """
 
 from __future__ import annotations
@@ -68,49 +57,6 @@ def _scalar_udfs():
         return pd.Series(table[idx])
 
     return km_per_deg_lon_udf
-
-
-def _grouped_agg_udfs():
-    """Construct the grouped-agg pandas UDF.
-
-    The UDF consumes a per-group (value, count) HISTOGRAM, not the raw turn
-    stream: the caller pre-reduces with a map-side-combined groupBy, so the
-    Arrow buffer a group ships is bounded by the signal's centi-unit value
-    RANGE, never by conversation length (a 10^8-turn hot conversation ships
-    the same few-thousand-row histogram as a normal one).  The weighted
-    median reproduces ``np.median`` over the expanded multiset exactly:
-    mean of the elements at 0-based ranks (n-1)//2 and n//2 — halves of
-    int64 values, bit-exact in double in both engines.
-
-    ONE UDF returns all three statistics as array<double> [n, med, mad]
-    instead of the former count/median/mad trio: grouped-agg evaluation
-    invokes each UDF once per GROUP, so with 10^4+ groups the per-call
-    Python dispatch (not the data volume) dominated — fusing cuts the call
-    count 3x and stops recomputing the median inside the MAD.  The count
-    crosses as a double but is exact (int64 counts << 2^53) and is cast
-    back to long in the caller; med/mad are the same doubles the separate
-    UDFs produced (identical _wmedian code path)."""
-    import numpy as np
-
-    def _wmedian(vals: "np.ndarray", cnts: "np.ndarray") -> float:
-        order = np.argsort(vals, kind="stable")
-        v = vals[order]
-        cum = np.cumsum(cnts[order])
-        n = int(cum[-1])
-        lo = int(np.searchsorted(cum, (n - 1) // 2 + 1))
-        hi = int(np.searchsorted(cum, n // 2 + 1))
-        return (float(v[lo]) + float(v[hi])) / 2.0
-
-    @pandas_udf("array<double>")
-    def median_mad_udf(v: pd.Series, c: pd.Series) -> list:
-        a = v.to_numpy(dtype="int64")
-        w = c.to_numpy(dtype="int64")
-        med = _wmedian(a, w)
-        # deviations are multiples of 0.5 — exact; reuse the weighted
-        # median over the (deviation, count) histogram
-        return [float(int(w.sum())), med, _wmedian(np.abs(a - med), w)]
-
-    return median_mad_udf
 
 
 def geodesic_scale(df: DataFrame) -> DataFrame:
@@ -180,24 +126,18 @@ def datum_shift(df: DataFrame) -> DataFrame:
 
 
 def grouped_median_mad(df: DataFrame) -> DataFrame:
-    """Per-conversation exact median/MAD of the centi-quantized signal via
-    grouped-agg pandas UDFs over a pre-reduced (value, count) histogram —
-    identical output to aggregating the raw stream, but the per-group
-    Arrow buffer is bounded by the signal's value range, not conversation
-    length (see _grouped_agg_udfs)."""
-    median_mad_udf = _grouped_agg_udfs()
+    """Per-conversation exact median/MAD of the centi-quantized signal.
+
+    The median and MAD come from a pre-reduced (value, count) histogram,
+    so a group's aggregate state is bounded by the signal's value range,
+    not conversation length (see ``outliers._median_mad2``)."""
+    from uncharted_ta1_pipeline_spark.operators.outliers import _median_mad2
+
     yc = F.floor(F.col("signal") * 100 + F.lit(0.5)).cast("long")
-    hist = (
-        df.select("conv_id", yc.alias("_yc"))
-        .groupBy("conv_id", "_yc")
-        .agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
-    )
-    g = hist.groupBy("conv_id").agg(
-        median_mad_udf(F.col("_yc"), F.col("_cnt")).alias("_s")
-    )
+    g = _median_mad2(df.select("conv_id", yc.alias("_yc")), "_yc")
     return g.select(
         "conv_id",
-        F.col("_s")[0].cast("long").alias("n"),
-        F.round(F.col("_s")[1] / 100.0, 6).alias("median_signal"),
-        F.round(F.col("_s")[2] / 100.0, 6).alias("mad_signal"),
+        F.col("_n").alias("n"),
+        F.round(F.col("_med2") / 200.0, 6).alias("median_signal"),
+        F.round(F.col("_mad2") / 200.0, 6).alias("mad_signal"),
     )

@@ -29,6 +29,37 @@ from pyspark.sql.types import (
 )
 
 
+def _median_mad2(df: DataFrame, yc: str) -> DataFrame:
+    """Per-conversation exact median and MAD of the int64 column ``yc``,
+    both doubled: ``conv_id, _n, _med2, _mad2``.
+
+    Both medians run over the per-conv VALUE HISTOGRAM with Spark's
+    frequency-weighted ``percentile(v, 0.5, cnt)`` — identical values to
+    the raw-stream percentile (integer counts expand to the same
+    multiset), while the aggregate's per-group value->count map is
+    bounded by the value range rather than conversation length.
+    Doubling keeps everything in int64: ``_med2`` is the interpolated
+    median times two (the .5 becomes an exact whole number), and the MAD
+    runs over half-units ``|2*yc - _med2|``, so Spark ``percentile`` and
+    DuckDB ``median``/``mad``/``quantile_cont`` agree bit for bit."""
+    hist = df.groupBy("conv_id", yc).agg(F.count(F.lit(1)).alias("_cnt"))
+    med = hist.groupBy("conv_id").agg(
+        F.round(F.expr(f"percentile({yc}, 0.5, _cnt)") * 2, 0)
+        .cast("long")
+        .alias("_med2")
+    )
+    return (
+        hist.join(med, on="conv_id")
+        .withColumn("_adev2", F.abs(F.col(yc) * 2 - F.col("_med2")))
+        .groupBy("conv_id")
+        .agg(
+            F.sum("_cnt").alias("_n"),
+            F.min("_med2").alias("_med2"),  # constant within the group
+            F.expr("percentile(_adev2, 0.5, _cnt)").alias("_mad2"),
+        )
+    )
+
+
 def mad_outliers(df: DataFrame, k: float = 3.0, value_col: str = "signal") -> DataFrame:
     """Flag rows whose value deviates from the conversation median by more
     than ``k`` * MAD (+epsilon).
@@ -36,41 +67,12 @@ def mad_outliers(df: DataFrame, k: float = 3.0, value_col: str = "signal") -> Da
     Integer-exact percentiles: the value is centi-quantized
     (``floor(v*100+0.5)`` — lossless for the 2-decimal fixture signals,
     the declared precision of this feature) and both medians run over
-    integers/half-integers, so Spark ``percentile`` and DuckDB
-    ``quantile_cont`` interpolate identically (the gap_quantiles fix,
-    convstats.py) AND the aggregate's per-group value->count map is
-    bounded by the VALUE RANGE in centi-units rather than conversation
-    length — the hot-conversation buffer caveat is retired.  The second
-    median runs over half-centi integers (``2*yc - med2``) to stay in
-    int64 end to end."""
+    the per-conv histogram in int64 (``_median_mad2``).  The base stream
+    is touched twice: the histogram build and the final flag join."""
     yc = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("long")
     base = df.select("conv_id", "turn_idx", value_col, yc.alias("_yc"))
-    # Both medians run over the per-conv VALUE HISTOGRAM with Spark's
-    # frequency-weighted percentile (identical values to the raw-stream
-    # percentile — integer counts expand to the same multiset), the
-    # grouped_median_mad shape: the old med -> join -> dev -> mad -> join
-    # chain re-evaluated the base stream ~6x; here it is touched twice
-    # (histogram build + final flag join) and the percentile work runs
-    # over the bounded histogram instead of every turn.
-    # med2 = 2 * centi-median: percentile of int64 doubled in the exact
-    # integer domain (the interpolated .5 becomes an exact whole number)
-    hist = base.groupBy("conv_id", "_yc").agg(F.count(F.lit(1)).alias("_cnt"))
-    med = hist.groupBy("conv_id").agg(
-        F.round(F.expr("percentile(_yc, 0.5, _cnt)") * 2, 0)
-        .cast("long")
-        .alias("_med2")
-    )
-    dim = (
-        hist.join(med, on="conv_id")
-        .withColumn("_adev2", F.abs(F.col("_yc") * 2 - F.col("_med2")))
-        .groupBy("conv_id")
-        .agg(
-            F.expr("percentile(_adev2, 0.5, _cnt)").alias("_mad2"),
-            F.min("_med2").alias("_med2"),  # constant within the group
-        )
-    )
     return (
-        base.join(dim, on="conv_id")
+        base.join(_median_mad2(base, "_yc"), on="conv_id")
         .withColumn("_adev2", F.abs(F.col("_yc") * 2 - F.col("_med2")))
         .select(
             "conv_id",

@@ -33,7 +33,10 @@ def with_sessions(
     Structured Streaming's ``session_window``)."""
     w = turn_order()
     us = F.unix_micros(F.col("ts"))
-    prev_us = F.lag(us).over(w)
+    # lag the ts column itself, not an expression of it: a window over
+    # input columns only merges into a window below it with the same spec
+    # (featurize's fused one), so only the running sum adds a level
+    prev_us = F.unix_micros(F.lag("ts").over(w))
     threshold = gap_us if gap_us is not None else gap_s * 1_000_000
     is_new = (prev_us.isNull() | ((us - prev_us) > F.lit(threshold))).cast("long")
     return df.withColumn(

@@ -7,6 +7,12 @@ greedy monotone grouping :621-688, overlap dedup
 ``pyspark.sql.Window`` specs partitioned by ``conv_id`` and ordered by
 ``(ts, turn_idx)`` — the stable turn-ordering invariant.
 
+Each feature's window columns are defined once, by a private builder that
+returns named Columns.  The ``with_*`` functions select one builder's
+columns; ``featurize`` selects them all at once, so Spark evaluates every
+frame that shares the (conv_id) ORDER BY (ts, turn_idx) spec in one Window
+operator over one sorted run.
+
 ZERO-LEAKAGE CONTRACT: every cumulative/rolling frame ends at ``-1``
 (strictly past).  A frame ending at 0 would let a feature see its own turn;
 ``rangeBetween`` is never used with an upper bound of 0 on ts.  The poison
@@ -31,57 +37,81 @@ def _tool_used() -> F.Column:
     return (F.col("tool").isNotNull() & (F.col("tool") != "")).cast("long")
 
 
+def _lag_lead_cols() -> list[F.Column]:
+    w = turn_order()
+    us = F.unix_micros(F.col("ts"))
+    prev_role = F.lag("role").over(w)
+    return [
+        prev_role.alias("prev_role"),
+        F.lead("role").over(w).alias("next_role"),
+        F.lag("tool").over(w).alias("prev_tool"),
+        F.concat(F.coalesce(prev_role, F.lit("START")), F.lit("->"), F.col("role")).alias(
+            "role_transition"
+        ),
+        F.round((us - F.lag(us).over(w)) / F.lit(1000000.0), 6).alias("secs_since_prev"),
+    ]
+
+
+def _first_use_col() -> F.Column:
+    """1 on the first (ts, turn_idx) use of each non-empty tool per conv."""
+    w = Window.partitionBy("conv_id", "tool").orderBy("ts", "turn_idx")
+    return ((F.row_number().over(w) == 1) & (_tool_used() == 1)).cast("long").alias(
+        "_first_tool_use"
+    )
+
+
+def _with_first_use(df: DataFrame, cols: list[F.Column]) -> DataFrame:
+    """Select ``cols`` over ``df`` plus the first-use flag they may read."""
+    return df.select("*", _first_use_col()).select("*", *cols).drop("_first_tool_use")
+
+
+def _cumulative_cols() -> list[F.Column]:
+    """Reads the flag of ``_first_use_col`` (see ``_with_first_use``)."""
+    past = turn_order().rowsBetween(PAST, -1)
+    return [
+        F.coalesce(F.count(F.lit(1)).over(past), F.lit(0)).alias("turns_so_far"),
+        F.coalesce(F.sum(_tool_used()).over(past), F.lit(0)).alias("tools_so_far"),
+        F.coalesce(F.sum("_first_tool_use").over(past), F.lit(0)).alias(
+            "distinct_tools_so_far"
+        ),
+    ]
+
+
+def _rolling_cols(width: int) -> list[F.Column]:
+    w = turn_order().rowsBetween(-width, -1)
+    return [
+        F.coalesce(F.count(F.lit(1)).over(w), F.lit(0)).alias(f"rolling_turns_{width}"),
+        F.coalesce(F.sum(_tool_used()).over(w), F.lit(0)).alias(f"rolling_tools_{width}"),
+        F.round(F.avg("signal").over(w), 6).alias(f"rolling_signal_mean_{width}"),
+    ]
+
+
+def _ffill_tool_col() -> F.Column:
+    w = turn_order().rowsBetween(PAST, -1)
+    non_empty = F.when(_tool_used() == 1, F.col("tool"))
+    return F.last(non_empty, ignorenulls=True).over(w).alias("ffill_tool")
+
+
 def with_lag_lead(df: DataFrame) -> DataFrame:
     """prev/next role + tool, role transition, seconds since previous turn.
 
     Analog of the reference's deg+min/sec adjacent-block pairing via the
     *next* OCR block (coordinates_extractor.py:509-539) — pure lag/lead.
     """
-    w = turn_order()
-    us = F.unix_micros(F.col("ts"))
-    return (
-        df.withColumn("prev_role", F.lag("role").over(w))
-        .withColumn("next_role", F.lead("role").over(w))
-        .withColumn("prev_tool", F.lag("tool").over(w))
-        .withColumn(
-            "role_transition",
-            F.concat(
-                F.coalesce(F.col("prev_role"), F.lit("START")),
-                F.lit("->"),
-                F.col("role"),
-            ),
-        )
-        .withColumn(
-            "secs_since_prev",
-            F.round((us - F.lag(us).over(w)) / F.lit(1000000.0), 6),
-        )
-    )
+    return df.select("*", *_lag_lead_cols())
 
 
 def with_cumulative(df: DataFrame) -> DataFrame:
     """Strictly-past cumulative counts: turns, tool uses, distinct tools.
 
-    Distinct-over-past uses the first-occurrence trick (flag the first use
-    of each tool per conv, then cumulative-sum the flags) so it stays a pure
-    window computation — no collect_set blowup on hot conversations.
+    Distinct-over-past uses the first-occurrence trick: a (conv_id, tool)
+    window flags the first use of each tool, and a strictly-past
+    cumulative sum of the flags counts the distinct tools seen before the
+    turn.  Both are pure window computations, with no collect_set state
+    per row on hot conversations.  The flag window is its own sort level
+    below the per-conversation window.
     """
-    w = turn_order()
-    past = w.rowsBetween(PAST, -1)
-    first_use = (
-        (F.row_number().over(Window.partitionBy("conv_id", "tool").orderBy("ts", "turn_idx")) == 1)
-        & F.col("tool").isNotNull()
-        & (F.col("tool") != "")
-    ).cast("long")
-    return (
-        df.withColumn("turns_so_far", F.coalesce(F.count(F.lit(1)).over(past), F.lit(0)))
-        .withColumn("tools_so_far", F.coalesce(F.sum(_tool_used()).over(past), F.lit(0)))
-        .withColumn("_first_tool_use", first_use)
-        .withColumn(
-            "distinct_tools_so_far",
-            F.coalesce(F.sum("_first_tool_use").over(past), F.lit(0)),
-        )
-        .drop("_first_tool_use")
-    )
+    return _with_first_use(df, _cumulative_cols())
 
 
 def with_rolling(df: DataFrame, width: int = 5) -> DataFrame:
@@ -90,12 +120,7 @@ def with_rolling(df: DataFrame, width: int = 5) -> DataFrame:
     north_rule: rolling turn-count / tool-usage features with frames
     ``rowsBetween(-k, -1)`` — never touching row 0.
     """
-    w = turn_order().rowsBetween(-width, -1)
-    return (
-        df.withColumn(f"rolling_turns_{width}", F.coalesce(F.count(F.lit(1)).over(w), F.lit(0)))
-        .withColumn(f"rolling_tools_{width}", F.coalesce(F.sum(_tool_used()).over(w), F.lit(0)))
-        .withColumn(f"rolling_signal_mean_{width}", F.round(F.avg("signal").over(w), 6))
-    )
+    return df.select("*", *_rolling_cols(width))
 
 
 def with_ffill_tool(df: DataFrame) -> DataFrame:
@@ -105,31 +130,40 @@ def with_ffill_tool(df: DataFrame) -> DataFrame:
     mirroring the reference's derived-keypoint inference
     (/root/reference/tasks/geo_referencing/inference.py:21-185).
     """
-    w = turn_order().rowsBetween(PAST, -1)
-    non_empty = F.when(F.col("tool").isNotNull() & (F.col("tool") != ""), F.col("tool"))
-    return df.withColumn("ffill_tool", F.last(non_empty, ignorenulls=True).over(w))
+    return df.select("*", _ffill_tool_col())
 
 
 def featurize(df: DataFrame, rolling_width: int = 5, gap_s: int = 1800) -> DataFrame:
     """The full per-turn feature stage: lag/lead + cumulative + rolling +
-    ffill + sessionization (a new session after a gap > ``gap_s``), in one
-    pass (all windows share the same partitioning, so Spark plans a single
-    sort+shuffle on conv_id)."""
+    ffill + sessionization (a new session after a gap > ``gap_s``).
+
+    One sorted pass per conversation.  The (conv_id, tool) first-use flag
+    is its own window level; every (conv_id) ORDER BY (ts, turn_idx)
+    column of the other features is then ONE select, so Spark evaluates
+    them all in one Window operator over one sorted run; ``with_sessions``
+    adds the session count on top, a second window level with no new sort.
+    Every window is keyed on conv_id, so the input's conv_id partitioning
+    (``load_transcripts``) is reused and no exchange is added.
+    """
     from uncharted_ta1_pipeline_spark.operators.sessionize import with_sessions
 
-    out = with_lag_lead(df)
-    out = with_cumulative(out)
-    out = with_rolling(out, rolling_width)
-    out = with_ffill_tool(out)
-    out = with_sessions(out, gap_s)
-    return out
+    out = _with_first_use(
+        df,
+        [
+            *_lag_lead_cols(),
+            *_cumulative_cols(),
+            *_rolling_cols(rolling_width),
+            _ffill_tool_col(),
+        ],
+    )
+    return with_sessions(out, gap_s)
 
 
 def with_rolling_multi(df: DataFrame, widths=(5, 25, 125)) -> DataFrame:
     """Multi-horizon rolling features: the ``with_rolling`` trio at several
-    strictly-past frame widths in ONE pass.  Every frame shares the same
-    (conv_id) partitioning and (ts, turn_idx) ordering, so Spark plans a
-    single sort+exchange and evaluates all horizons over one sorted run —
+    strictly-past frame widths in ONE select.  Every frame shares the same
+    (conv_id) partitioning and (ts, turn_idx) ordering, so Spark plans one
+    Window operator and evaluates all horizons over one sorted run —
     adding a horizon costs frame arithmetic, not another shuffle.  The
     geometric width ladder (5, 25, 125) is the standard multi-resolution
     recency profile a ranking/feature model consumes (short-burst vs
@@ -146,26 +180,17 @@ def with_rolling_multi(df: DataFrame, widths=(5, 25, 125)) -> DataFrame:
     order-free in both engines; one division + round(6) at the end.  Same
     lever as IVF_QUANT / the integer-µs gap percentiles.
     """
-    out = df
     qsig = F.floor(F.col("signal") * F.lit(1000000.0)).cast("long")
+    cols = []
     for width in widths:
         w = turn_order().rowsBetween(-width, -1)
-        out = (
-            out.withColumn(
-                f"rolling_turns_{width}",
-                F.coalesce(F.count(F.lit(1)).over(w), F.lit(0)),
-            )
-            .withColumn(
-                f"rolling_tools_{width}",
-                F.coalesce(F.sum(_tool_used()).over(w), F.lit(0)),
-            )
-            .withColumn(
-                f"rolling_signal_mean_{width}",
-                F.round(
-                    F.sum(qsig).over(w).cast("double")
-                    / (F.lit(1000000.0) * F.count(F.lit(1)).over(w)),
-                    6,
-                ),
-            )
-        )
-    return out
+        cols += [
+            F.coalesce(F.count(F.lit(1)).over(w), F.lit(0)).alias(f"rolling_turns_{width}"),
+            F.coalesce(F.sum(_tool_used()).over(w), F.lit(0)).alias(f"rolling_tools_{width}"),
+            F.round(
+                F.sum(qsig).over(w).cast("double")
+                / (F.lit(1000000.0) * F.count(F.lit(1)).over(w)),
+                6,
+            ).alias(f"rolling_signal_mean_{width}"),
+        ]
+    return df.select("*", *cols)

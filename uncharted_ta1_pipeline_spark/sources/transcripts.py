@@ -19,7 +19,7 @@ Two sources are provided:
    The mapping is arbitrary but fixed:
 
    - conv_id  = 'conv' || lpad(user_id, 6, '0')
-   - turn_idx = row_number() over (partition by user_id
+   - turn_idx = row_number() over (partition by conv_id
                                    order by ts, event_id) - 1
      (stable ordering invariant: ties on ts broken by event_id — mirrors the
      reference's sorted input listing, /root/reference/tasks/common/io.py:104)
@@ -41,6 +41,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 # ---------------------------------------------------------------------------
 # DuckDB CTE — textual twin of load_transcripts(); keep the two in lockstep.
+# The CTE numbers turns over PARTITION BY user_id, load_transcripts over
+# conv_id: conv_id = 'conv' || lpad(user_id, 6, '0') is a bijection with
+# user_id in [0, 10^6) (lpad truncates longer ids), so both partitionings
+# group the same rows and turn_idx agrees.
 # ---------------------------------------------------------------------------
 TRANSCRIPTS_CTE = """
 transcripts AS (
@@ -97,15 +101,22 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic transcripts table derived from the events parquet.
 
-    Must stay semantically identical to TRANSCRIPTS_CTE above.
+    Must stay semantically identical to TRANSCRIPTS_CTE above.  conv_id is
+    computed BEFORE the turn-numbering window, and the window is
+    partitioned by it: the output is then hash-partitioned on conv_id, the
+    key of every per-conversation operator downstream, which reuses the
+    ingest exchange instead of adding its own.  (Partitioning by user_id
+    and aliasing conv_id afterwards does not: Spark cannot see that the
+    two keys group the same rows.)  A conv_id filter, like the manifest's
+    bucket filter, also reaches the scan side of this window.
     """
-    ev = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev = load_events(spark, sf_dir).withColumn(
+        "conv_id", F.concat(F.lit("conv"), F.lpad(F.col("user_id").cast("string"), 6, "0"))
+    )
+    w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
     eid = F.col("event_id")
     return ev.select(
-        F.concat(F.lit("conv"), F.lpad(F.col("user_id").cast("string"), 6, "0")).alias(
-            "conv_id"
-        ),
+        "conv_id",
         (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
         F.when(F.col("event_type").isin("click", "view", "signup"), F.lit("user"))
         .when(F.col("event_type") == "purchase", F.lit("assistant"))
