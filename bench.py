@@ -15,7 +15,6 @@ bottleneck, no disk write skew).
 
 Usage:
     python bench.py                 # driver per-round bench
-    SPARK_GRAFT_CPUS=8 python bench.py --synth 2000000   # scaling probe
 """
 
 from __future__ import annotations
@@ -75,8 +74,6 @@ def compact_result(result: dict, budget: int = 1800) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--synth", type=int, default=0,
-                    help="bench on N synthetic turns instead of sf dir")
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=0,
@@ -95,7 +92,6 @@ def main() -> None:
     from uncharted_ta1_pipeline_spark.sources.transcripts import (
         load_transcripts,
         make_probes,
-        synth_transcripts,
     )
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -103,31 +99,12 @@ def main() -> None:
     # multi-executor run; set SPARK_GRAFT_CPUS to the TOTAL core count so
     # shuffle partitioning matches).  session.py resolves the env var.
     master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
-    # scaling runs pin SPARK_GRAFT_SHUFFLE so both cluster sizes process
-    # identical task slices (unequal partition counts would conflate task
-    # granularity with executor scaling)
     shuffle = int(
         os.environ.get("SPARK_GRAFT_SHUFFLE", "0")
     ) or max(int(cpus) * 2, 8)
     spark = get_spark(master=master, shuffle_partitions=shuffle)
 
-    if args.synth:
-        # materialize the deterministic synthetic input to parquet once
-        # (cached across runs/parallelism levels — the input is identical by
-        # construction), then read it back: the realistic scan path.
-        cache = f"/tmp/spark-graft-synth-{args.synth}"
-        if not os.path.isdir(cache):
-            synth_transcripts(
-                spark,
-                n_convs=max(200, args.synth // 5000),
-                mean_turns=4000,
-                hot_convs=3,
-                hot_turns=args.synth // 10,
-            ).repartition(64).write.mode("overwrite").parquet(cache + ".tmp")
-            os.rename(cache + ".tmp", cache)
-        t = spark.read.parquet(cache)
-    else:
-        t = load_transcripts(spark, args.sf_dir)
+    t = load_transcripts(spark, args.sf_dir)
     n_turns = t.count()
 
     timings: dict[str, float] = {}
@@ -135,45 +112,36 @@ def main() -> None:
     # headline: full leakage-free feature materialization (hybrid physical
     # strategy — hot conversations take the salted/chunked path)
     feats = featurize_hybrid(t)
-    big = args.synth >= 4_000_000
-    # Fresh executor JVMs pay first-touch page faults on their window/
-    # shuffle buffers during the first executions (the Firecracker fault
-    # path, BENCH/BASELINE.md); SPARK_GRAFT_WARMUP lets cluster-mode runs
-    # warm pages before measuring steady state.
-    warmup = int(os.environ.get("SPARK_GRAFT_WARMUP", "0")) or (1 if big else 2)
-    timings["featurize_full"] = materialize(
-        feats, warmup=warmup, runs=args.runs or (2 if big else 3)
-    )
+    timings["featurize_full"] = materialize(feats, runs=args.runs or 3)
 
-    if not args.synth:
-        # as-of join (salted/bucketed scale path); state derived from the
-        # same salted feature pass
-        probes = make_probes(t)
-        used = F.col("tool").isNotNull() & (F.col("tool") != "")
-        state = feats.select(
-            "conv_id",
-            "ts",
-            "turn_idx",
-            F.col("role").alias("last_role"),
-            (F.col("turns_so_far") + 1).cast("long").alias("turns_incl"),
-            (F.col("tools_so_far") + used.cast("long")).alias("tools_incl"),
-            F.col("session_id").alias("last_session_id"),
+    # as-of join (salted/bucketed scale path); state derived from the
+    # same salted feature pass
+    probes = make_probes(t)
+    used = F.col("tool").isNotNull() & (F.col("tool") != "")
+    state = feats.select(
+        "conv_id",
+        "ts",
+        "turn_idx",
+        F.col("role").alias("last_role"),
+        (F.col("turns_so_far") + 1).cast("long").alias("turns_incl"),
+        (F.col("tools_so_far") + used.cast("long")).alias("tools_incl"),
+        F.col("session_id").alias("last_session_id"),
+    )
+    timings["asof_bucketed"] = materialize(
+        asof_join_bucketed(probes, state, state_cols=[
+            "turn_idx", "last_role", "turns_incl", "tools_incl",
+            "last_session_id"])
+    )
+    timings["session_stats"] = materialize(session_stats(t))
+    for name, fn in QUERIES.items():
+        if name == "featurize_full":
+            continue  # already the headline timing above
+        timings[f"q_{name}"] = materialize(fn(spark, args.sf_dir))
+    # full operator surface, one timed run each (coverage over precision)
+    for name, fn in {**QUERIES_OPS, **QUERIES_DOCS}.items():
+        timings[f"q_{name}"] = materialize(
+            fn(spark, args.sf_dir), warmup=1, runs=1
         )
-        timings["asof_bucketed"] = materialize(
-            asof_join_bucketed(probes, state, state_cols=[
-                "turn_idx", "last_role", "turns_incl", "tools_incl",
-                "last_session_id"])
-        )
-        timings["session_stats"] = materialize(session_stats(t))
-        for name, fn in QUERIES.items():
-            if name == "featurize_full":
-                continue  # already the headline timing above
-            timings[f"q_{name}"] = materialize(fn(spark, args.sf_dir))
-        # full operator surface, one timed run each (coverage over precision)
-        for name, fn in {**QUERIES_OPS, **QUERIES_DOCS}.items():
-            timings[f"q_{name}"] = materialize(
-                fn(spark, args.sf_dir), warmup=1, runs=1
-            )
 
     total = sum(timings.values())
     result = {
@@ -182,26 +150,22 @@ def main() -> None:
         "unit": "turns/sec",
         "total_sec": round(total, 2),
         "queries": {k: round(v, 3) for k, v in timings.items()},
-        "sf": args.sf_dir if not args.synth else f"synth:{n_turns}",
+        "sf": args.sf_dir,
         "n_turns": n_turns,
         "cpus": int(cpus),
     }
     spark.stop()
     # full record to disk (committed with the repo), short line to stdout —
     # the driver's 2000-char tail capture must contain the whole line.
-    # Synth probes (bench_scaling legs) skip the write: they cover one
-    # query on synthetic input and were silently clobbering the standing
-    # full-registry record (observed twice; restored from git each time).
-    if not args.synth:
-        full_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH", "bench_full_latest.json")
-        try:
-            with open(full_path, "w") as f:
-                json.dump(result, f, indent=1)
-            result["queries_file"] = "BENCH/bench_full_latest.json"
-        except OSError:
-            pass
+    full_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "BENCH", "bench_full_latest.json")
+    try:
+        with open(full_path, "w") as f:
+            json.dump(result, f, indent=1)
+        result["queries_file"] = "BENCH/bench_full_latest.json"
+    except OSError:
+        pass
     print(compact_result(result))
 
 

@@ -51,41 +51,3 @@ def test_truncation_keeps_slowest_queries():
 def test_small_result_is_untruncated():
     parsed = json.loads(compact_result(_result(10)))
     assert len(parsed["queries"]) == 10
-
-
-def test_scaling_observation_log_merges_minima(tmp_path, monkeypatch):
-    """The scaling headline must be the min per level across ALL recorded
-    windows of a shape — a later run in a degraded host window must not
-    clobber an earlier, better minimum (the r4 inter-session incident)."""
-    import bench_scaling as bs
-
-    monkeypatch.setattr(bs, "OBS_PATH", str(tmp_path / "obs.jsonl"))
-    shape = {"exec_lo": 1, "exec_hi": 4, "cores": 4, "mem_mb": 8192,
-             "java_opts": "-XX:+AlwaysPreTouch", "turns": 8_000_000}
-    other = dict(shape, cores=1)
-    # window 1: good; window 2: degraded; alien shape must not leak in
-    bs.record_obs(shape, "lo", 55.29)
-    bs.record_obs(shape, "hi", 18.38)
-    bs.record_obs(other, "hi", 1.0)
-    bs.record_obs(shape, "lo", 70.9)
-    bs.record_obs(shape, "hi", 43.3)
-    lo, hi = bs.load_obs(shape)
-    assert lo == [55.29, 70.9] and hi == [18.38, 43.3]
-    assert min(lo) == 55.29 and min(hi) == 18.38  # degraded window ignored
-    # corrupt line is skipped, not fatal
-    with open(bs.OBS_PATH, "a") as f:
-        f.write("not json\n")
-    assert bs.load_obs(shape) == ([55.29, 70.9], [18.38, 43.3])
-
-
-def test_effective_java_opts_resolution(monkeypatch):
-    """Explicit --java-opts wins; otherwise the session env default applies
-    (so observations of the default and explicit-pretouch runs share one
-    shape key)."""
-    import bench_scaling as bs
-
-    monkeypatch.delenv("SPARK_GRAFT_EXEC_JAVA_OPTS", raising=False)
-    assert bs.effective_java_opts("") == "-XX:+AlwaysPreTouch"
-    assert bs.effective_java_opts("-Xfoo") == "-Xfoo"
-    monkeypatch.setenv("SPARK_GRAFT_EXEC_JAVA_OPTS", "-Xbar")
-    assert bs.effective_java_opts("") == "-Xbar"

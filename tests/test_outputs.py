@@ -1,9 +1,8 @@
-"""OutputCreator surface (plans/outputs.py), local data cache + broadcast
-dims (sources/cache.py), and the metrics table (plans/pipeline.py)."""
+"""Local data cache + broadcast dims (sources/cache.py) and the metrics
+table (plans/pipeline.py)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyspark.sql.functions as F
@@ -15,53 +14,6 @@ def _load(spark):
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     return load_transcripts(spark, SF_SMOKE)
-
-
-def test_output_kinds_roundtrip(spark, tmp_path):
-    """Each output kind is a schema-stable terminal projection; writers
-    produce readable files."""
-    from uncharted_ta1_pipeline_spark.plans import outputs as out
-
-    t = _load(spark).limit(200).cache()
-
-    tab = out.tabular_output(t, ["conv_id", "turn_idx", "role"], "p1", "georef")
-    assert tab.columns == ["pipeline_id", "pipeline_name", "conv_id", "turn_idx", "role"]
-    assert tab.filter(F.col("pipeline_id") != "p1").count() == 0
-
-    obj = out.object_output(t.select("conv_id", "turn_idx", "role", "tool"),
-                            ["conv_id", "turn_idx"])
-    assert obj.columns == ["conv_id", "turn_idx", "object_json"]
-    row = obj.orderBy("conv_id", "turn_idx").first()
-    assert "role" in json.loads(row.object_json)
-
-    lst = out.list_output(t, "conv_id", ["turn_idx"], "role")
-    one = lst.first()
-    n = t.filter(F.col("conv_id") == one.conv_id).count()
-    assert len(one.role_list) == n
-
-    b = t.select("conv_id", "turn_idx", F.encode("text", "UTF-8").alias("blob"))
-    byt = out.bytes_output(b, "blob", ["conv_id", "turn_idx"])
-    r = byt.first()
-    assert r.payload_len == len(r.payload) and len(r.payload_sha256) == 64
-
-    mod = out.model_output(t.select("conv_id", "turn_idx", "role"), ["conv_id", "turn_idx"])
-    assert mod.schema["record"].dataType.typeName() == "struct"
-    assert mod.filter(F.col("schema_version") != out.SCHEMA_VERSION).count() == 0
-
-    mlist = out.model_list_output(t.select("conv_id", "turn_idx", "role"), "conv_id",
-                                  ["turn_idx"])
-    assert mlist.columns == ["conv_id", "schema_version", "records"]
-
-    emp = out.empty_output(spark, tab)
-    assert emp.count() == 0 and emp.schema == tab.schema
-
-    # writers
-    out.write_output(tab, "tabular", str(tmp_path / "tab"))
-    out.write_output(obj, "object", str(tmp_path / "obj"))
-    out.write_output(mod, "model", str(tmp_path / "mod"))
-    assert spark.read.option("header", True).csv(str(tmp_path / "tab")).count() == 200
-    assert spark.read.json(str(tmp_path / "obj")).count() == 200
-    assert spark.read.parquet(str(tmp_path / "mod")).count() == 200
 
 
 def test_local_data_cache(tmp_path):

@@ -24,7 +24,9 @@ def test_featurize_single_partitioning_exchanges(spark):
     the only one.  Sorts: ingest (ts, event_id), the (conv_id, tool)
     first-use flag, and the fused (ts, turn_idx) run.  Windows: those
     three plus the session count, which needs a second level over the
-    fused run's lag but no new sort."""
+    fused run's lag but no new sort.  Lags: one each of role, tool and ts;
+    role_transition, secs_since_prev and the session flag read the lagged
+    columns instead of lagging again."""
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
@@ -33,9 +35,11 @@ def test_featurize_single_partitioning_exchanges(spark):
     n_exchanges = plan.count("Exchange hashpartitioning")
     n_sorts = len(re.findall(r"\bSort \[", plan))
     n_windows = len(re.findall(r"\bWindow \[", plan))
+    n_lags = len(re.findall(r"\blag\(", plan))
     assert n_exchanges == 1, f"exchanges: {n_exchanges}\n{plan[:3000]}"
     assert n_sorts <= 3, f"sorts: {n_sorts}\n{plan[:3000]}"
     assert n_windows <= 4, f"window operators: {n_windows}\n{plan[:3000]}"
+    assert n_lags == 3, f"lags: {n_lags}\n{plan[:3000]}"
     # codegen coverage is only visible on the finalized adaptive plan of
     # THIS DataFrame's QueryExecution — run an action through it first
     df.collect()

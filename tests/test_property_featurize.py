@@ -112,7 +112,7 @@ def test_featurize_matches_bruteforce(spark, salted, data):
     )
     want = _reference(rows, gap_s)
     features = list(next(iter(want.values())))
-    assert sorted(out.columns) == sorted(df.columns + features)
+    assert out.columns == df.columns + features
     got = {(r.conv_id, r.turn_idx): r.asDict() for r in out.collect()}
     assert got.keys() == want.keys()
     for key, cols in want.items():

@@ -1,8 +1,9 @@
 """The spark-submit --py-files artifact (scripts/package_pyfiles.py).
 
 No SparkSession needed: validates the zip is deterministic, complete, and
-importable as a sys.path entry — the properties the cluster-mode scaling
-bench (bench_scaling.py --mode cluster) depends on.
+importable as a sys.path entry — the properties a ``spark-submit
+--py-files`` deployment to a cluster master (``local-cluster``,
+``spark://``; see session.py) depends on.
 """
 
 from __future__ import annotations

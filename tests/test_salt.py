@@ -14,8 +14,8 @@ from tests.conftest import SF_SMOKE
 def _cmp(a: pd.DataFrame, b: pd.DataFrame, key=("conv_id", "turn_idx")):
     a = a.sort_values(list(key)).reset_index(drop=True)
     b = b.sort_values(list(key)).reset_index(drop=True)
-    b = b[a.columns]
-    pd.testing.assert_frame_equal(a, b, check_like=True)
+    assert list(b.columns) == list(a.columns)
+    pd.testing.assert_frame_equal(a, b)
 
 
 @pytest.mark.parametrize("chunk_size", [7, 64, 100000])

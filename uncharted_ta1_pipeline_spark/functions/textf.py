@@ -45,9 +45,3 @@ def normalize_text(text: F.Column) -> F.Column:
     cleaned = F.regexp_replace(text, r"(?i)\bturn\b", "")
     cleaned = F.regexp_replace(cleaned, r"[^\w\s]", "")
     return F.trim(F.regexp_replace(cleaned, r"\s+", " "))
-
-
-def sha_key(*cols: F.Column) -> F.Column:
-    """Content hash for cache/manifest keys (≈ sha256 cache keys,
-    metadata_extraction.py:465-476)."""
-    return F.sha2(F.concat_ws("|", *cols), 256)

@@ -14,8 +14,8 @@ Scale design:
 - n-gram jaccard: candidate pairs via shared-shingle join (inverted index),
   counts aggregated, jaccard filtered.  Hot shingles should be
   stop-listed (df cap) at scale; parameterized here.
-- simhash: 16-bit signature via md5-nibble votes; near-dup = small hamming
-  distance on the signature.
+- simhash: 64-bit signature via md5-nibble votes; near-dup = small hamming
+  distance, found by exact-match joins on four 16-bit bands.
 """
 
 from __future__ import annotations
@@ -385,17 +385,6 @@ def _band_exprs(n_bits: int, band_bits: int) -> list:
             term = t if term is None else term + t
         cols.append(term.cast("int").alias(f"_band{b}"))
     return cols
-
-
-def simhash16(docs: DataFrame) -> DataFrame:
-    """16-bit SimHash over word tokens (compact variant; production width
-    is ``simhash64``)."""
-    g = _simhash_votes(docs, 16)
-    sim = None
-    for i in range(16):
-        term = F.when(_bit_is_set(i), F.lit(2**i)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return g.select("doc_id", sim.cast("int").alias("simhash"))
 
 
 SIMHASH_BITS = 64

@@ -87,17 +87,19 @@ def featurize_hybrid(
     # plan: 1 full-width scan (the output branch) + 1 narrow hot-only scan
     # (chunk sums) + pruned conv_id scans for the dims.
     flagged = df.join(F.broadcast(hot), on="conv_id", how="left")
-    return _featurize_salted(flagged, chunk_size, rolling_width, gap_s)
+    return _featurize_salted(flagged, df.columns, chunk_size, rolling_width, gap_s)
 
 
 def _featurize_salted(
-    df: DataFrame, chunk_size: int, rolling_width: int, gap_s: int
+    df: DataFrame, input_cols: list[str], chunk_size: int, rolling_width: int, gap_s: int
 ) -> DataFrame:
     """Salted equivalent of ``operators.windows.featurize`` over a frame
     carrying the boolean routing column ``_hot`` (NULL ⇒ cold).  Cold
     conversations take chunk 0 with NO boundary carries and NO offset rows
     — for them the bounded window degenerates to the plain per-conversation
-    window, so hot and cold are featurized in the SAME single pass.
+    window, so hot and cold are featurized in the SAME single pass.  The
+    output is ``input_cols`` followed by the features, in featurize's
+    column order.
 
     Requires ``turn_idx`` to be the dense 0-based stable order within each
     conversation (the ingest invariant), aligned with (ts, turn_idx) order.
@@ -344,10 +346,10 @@ def _featurize_salted(
             ),
         )
     )
-    drop = [
-        "_us", "_chunk", "_used", "_first_use", "_t", "_tgt", "_kind", "_lag",
-        "_p_turns", "_p_tools", "_p_firsts", "_p_ffill", "_p_sess", "_is_new",
-        "_off_turns", "_off_tools", "_off_firsts", "_off_sess", "_carry_ffill",
-        "_hot",
-    ]
-    return out.drop(*drop)
+    return out.select(
+        *input_cols,
+        "prev_role", "next_role", "prev_tool", "role_transition", "secs_since_prev",
+        "turns_so_far", "tools_so_far", "distinct_tools_so_far",
+        f"rolling_turns_{k}", f"rolling_tools_{k}", f"rolling_signal_mean_{k}",
+        "ffill_tool", "session_id",
+    )

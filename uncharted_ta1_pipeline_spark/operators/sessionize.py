@@ -22,29 +22,31 @@ from uncharted_ta1_pipeline_spark.operators.windows import turn_order
 DEFAULT_GAP_S = 1800
 
 
-def with_sessions(
-    df: DataFrame, gap_s: int = DEFAULT_GAP_S, gap_us: int | None = None
-) -> DataFrame:
+def session_id_col(prev_us: F.Column, gap_s: int) -> F.Column:
+    """``session_id`` (0-based per conversation) from the previous turn's
+    ts in integer micros: a new session starts when the gap to the
+    previous turn is strictly greater than ``gap_s`` seconds."""
+    us = F.unix_micros(F.col("ts"))
+    is_new = (prev_us.isNull() | ((us - prev_us) > F.lit(gap_s * 1_000_000))).cast(
+        "long"
+    )
+    return (
+        (F.sum(is_new).over(turn_order().rowsBetween(Window.unboundedPreceding, 0)) - F.lit(1))
+        .cast("long")
+        .alias("session_id")
+    )
+
+
+def with_sessions(df: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame:
     """Add ``session_id`` (0-based per conversation).
 
     A new session starts when the gap to the previous turn is strictly
-    greater than the threshold.  ``gap_us`` overrides at microsecond
-    precision (``gap_s * 1e6 - 1`` reproduces the half-open semantics of
-    Structured Streaming's ``session_window``)."""
-    w = turn_order()
-    us = F.unix_micros(F.col("ts"))
+    greater than ``gap_s`` seconds."""
     # lag the ts column itself, not an expression of it: a window over
-    # input columns only merges into a window below it with the same spec
-    # (featurize's fused one), so only the running sum adds a level
-    prev_us = F.unix_micros(F.lag("ts").over(w))
-    threshold = gap_us if gap_us is not None else gap_s * 1_000_000
-    is_new = (prev_us.isNull() | ((us - prev_us) > F.lit(threshold))).cast("long")
-    return df.withColumn(
-        "session_id",
-        (
-            F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)) - F.lit(1)
-        ).cast("long"),
-    )
+    # input columns only merges into a window below it with the same spec,
+    # so only the running sum adds a level
+    prev_us = F.unix_micros(F.lag("ts").over(turn_order()))
+    return df.select("*", session_id_col(prev_us, gap_s))
 
 
 def denoise_segments(
@@ -132,15 +134,13 @@ def text_with_segments(df: DataFrame, min_signal: float = 5.0) -> DataFrame:
     ).select("conv_id", "turn_idx", "island_id", "start_us", "end_us")
 
 
-def session_stats(
-    df: DataFrame, gap_s: int = DEFAULT_GAP_S, gap_us: int | None = None
-) -> DataFrame:
+def session_stats(df: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame:
     """Per-session aggregate summary (count, span, tool usage, roles).
 
     Analog of the reference's per-segment stats / rank_segments inputs
     (segmenter_utils.py:20-37).
     """
-    s = with_sessions(df, gap_s, gap_us)
+    s = with_sessions(df, gap_s)
     us = F.unix_micros(F.col("ts"))
     return s.groupBy("conv_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
@@ -154,9 +154,7 @@ def session_stats(
     )
 
 
-def session_carryover(
-    df: DataFrame, gap_s: int = DEFAULT_GAP_S, gap_us: int | None = None
-) -> DataFrame:
+def session_carryover(df: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame:
     """Per-session returning-user carryover features: what a model serving
     the FIRST turn of a session may know — all of it derived strictly from
     EARLIER sessions (the zero-leakage contract lifted from turns to
@@ -186,7 +184,7 @@ def session_carryover(
     registered oracle SQL; non-default calls bypass the driver parity gate
     and are pytest-only — the denoise_segments convention.
     """
-    s = session_stats(df, gap_s, gap_us)
+    s = session_stats(df, gap_s)
     w = Window.partitionBy("conv_id").orderBy("session_id")
     prev_end = F.lag("end_us").over(w)
     gap = F.round(

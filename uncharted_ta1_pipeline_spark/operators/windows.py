@@ -38,18 +38,31 @@ def _tool_used() -> F.Column:
 
 
 def _lag_lead_cols() -> list[F.Column]:
+    """The lag/lead window columns.  Each lag is evaluated once:
+    ``role_transition`` and ``secs_since_prev`` are derived from
+    ``prev_role`` and ``_prev_us`` in the projection above the window
+    (``_lag_lead_finish``), and featurize's session flag reads
+    ``_prev_us`` too."""
     w = turn_order()
-    us = F.unix_micros(F.col("ts"))
-    prev_role = F.lag("role").over(w)
     return [
-        prev_role.alias("prev_role"),
+        F.lag("role").over(w).alias("prev_role"),
         F.lead("role").over(w).alias("next_role"),
         F.lag("tool").over(w).alias("prev_tool"),
-        F.concat(F.coalesce(prev_role, F.lit("START")), F.lit("->"), F.col("role")).alias(
+        F.unix_micros(F.lag("ts").over(w)).alias("_prev_us"),
+    ]
+
+
+def _lag_lead_finish(df: DataFrame) -> DataFrame:
+    """Replace ``_prev_us`` by ``role_transition`` and ``secs_since_prev``,
+    in place, so the columns keep ``with_lag_lead``'s order."""
+    us = F.unix_micros(F.col("ts"))
+    derived = [
+        F.concat(F.coalesce(F.col("prev_role"), F.lit("START")), F.lit("->"), F.col("role")).alias(
             "role_transition"
         ),
-        F.round((us - F.lag(us).over(w)) / F.lit(1000000.0), 6).alias("secs_since_prev"),
+        F.round((us - F.col("_prev_us")) / F.lit(1000000.0), 6).alias("secs_since_prev"),
     ]
+    return df.select(*[c for n in df.columns for c in (derived if n == "_prev_us" else [n])])
 
 
 def _first_use_col() -> F.Column:
@@ -98,7 +111,7 @@ def with_lag_lead(df: DataFrame) -> DataFrame:
     Analog of the reference's deg+min/sec adjacent-block pairing via the
     *next* OCR block (coordinates_extractor.py:509-539) — pure lag/lead.
     """
-    return df.select("*", *_lag_lead_cols())
+    return _lag_lead_finish(df.select("*", *_lag_lead_cols()))
 
 
 def with_cumulative(df: DataFrame) -> DataFrame:
@@ -140,12 +153,13 @@ def featurize(df: DataFrame, rolling_width: int = 5, gap_s: int = 1800) -> DataF
     One sorted pass per conversation.  The (conv_id, tool) first-use flag
     is its own window level; every (conv_id) ORDER BY (ts, turn_idx)
     column of the other features is then ONE select, so Spark evaluates
-    them all in one Window operator over one sorted run; ``with_sessions``
-    adds the session count on top, a second window level with no new sort.
-    Every window is keyed on conv_id, so the input's conv_id partitioning
-    (``load_transcripts``) is reused and no exchange is added.
+    them all in one Window operator over one sorted run; the session count
+    (``sessionize.session_id_col``) reads that run's ``_prev_us`` and adds
+    a second window level with no new sort.  Every window is keyed on
+    conv_id, so the input's conv_id partitioning (``load_transcripts``) is
+    reused and no exchange is added.
     """
-    from uncharted_ta1_pipeline_spark.operators.sessionize import with_sessions
+    from uncharted_ta1_pipeline_spark.operators.sessionize import session_id_col
 
     out = _with_first_use(
         df,
@@ -156,7 +170,7 @@ def featurize(df: DataFrame, rolling_width: int = 5, gap_s: int = 1800) -> DataF
             _ffill_tool_col(),
         ],
     )
-    return with_sessions(out, gap_s)
+    return _lag_lead_finish(out.select("*", session_id_col(F.col("_prev_us"), gap_s)))
 
 
 def with_rolling_multi(df: DataFrame, widths=(5, 25, 125)) -> DataFrame:

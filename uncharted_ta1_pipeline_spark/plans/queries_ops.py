@@ -287,15 +287,15 @@ QUERIES_OPS["asof_features_bucketed"] = q_asof_features_bucketed
 
 
 def q_scoring_output(spark, sf_dir):
-    """ScoringOutput creator over the fit-predict result (extended field
-    set): per-probe prediction + trend-adjustment error + support-based
-    confidence (plans/outputs.py)."""
+    """ScoringOutput creator over the fit-predict result: per-probe
+    prediction + trend-adjustment error + support-based confidence
+    (plans/outputs.py)."""
     from uncharted_ta1_pipeline_spark.operators.asof import fit_predict_at_probes
     from uncharted_ta1_pipeline_spark.plans.outputs import scoring_output
     from uncharted_ta1_pipeline_spark.sources.transcripts import make_probes
 
     t = _t(spark, sf_dir)
-    return scoring_output(fit_predict_at_probes(make_probes(t), t), extended=True)
+    return scoring_output(fit_predict_at_probes(make_probes(t), t))
 
 
 def q_summary_output(spark, sf_dir):

@@ -59,18 +59,3 @@ def densify_turn_idx(df: DataFrame) -> DataFrame:
 def write_json(df: DataFrame, path: str, n_files: int | None = None) -> None:
     out = df.repartition(n_files) if n_files else df
     out.write.mode("overwrite").option("timestampFormat", JSON_TS_FMT).json(path)
-
-
-def write_parquet_partitioned(
-    df: DataFrame, path: str, n_buckets: int = 32
-) -> None:
-    """Sink partitioned by conv-hash bucket — the layout the manifest/
-    resume layer reads back with partition pruning."""
-    (
-        df.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
