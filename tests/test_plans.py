@@ -26,10 +26,15 @@ def test_featurize_single_partitioning_exchanges(spark):
     three plus the session count, which needs a second level over the
     fused run's lag but no new sort.  Lags: one each of role, tool and ts;
     role_transition, secs_since_prev and the session flag read the lagged
-    columns instead of lagging again."""
+    columns instead of lagging again.  ``with_sessions`` shares the session
+    builder and lags ts once too."""
+    from uncharted_ta1_pipeline_spark.operators.sessionize import with_sessions
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
+    sessions = _plan(with_sessions(load_transcripts(spark, SF_SMOKE)))
+    n_session_lags = len(re.findall(r"\blag\(", sessions))
+    assert n_session_lags == 1, f"with_sessions lags: {n_session_lags}\n{sessions[:3000]}"
     df = featurize(load_transcripts(spark, SF_SMOKE))
     plan = _plan(df)
     n_exchanges = plan.count("Exchange hashpartitioning")

@@ -92,10 +92,14 @@ def _reference(rows, gap_s):
     return out
 
 
-@pytest.mark.parametrize("salted", [False, True], ids=["plain", "salted"])
+# chunk_size None is the plain path.  6 is ``WIDTH + 1``, the smallest chunk
+# the salted path accepts: its tail carries fill all but one row of a chunk.
+@pytest.mark.parametrize(
+    "chunk_size", [None, 8, 6], ids=["plain", "salted", "salted-chunk6"]
+)
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(data=transcripts())
-def test_featurize_matches_bruteforce(spark, salted, data):
+def test_featurize_matches_bruteforce(spark, chunk_size, data):
     from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
 
@@ -106,8 +110,8 @@ def test_featurize_matches_bruteforce(spark, salted, data):
         "tool string, ts timestamp, signal double",
     )
     out = (
-        featurize_hybrid(df, hot_threshold=0, chunk_size=8, gap_s=gap_s)
-        if salted
+        featurize_hybrid(df, hot_threshold=0, chunk_size=chunk_size, gap_s=gap_s)
+        if chunk_size
         else featurize(df, gap_s=gap_s)
     )
     want = _reference(rows, gap_s)

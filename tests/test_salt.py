@@ -5,6 +5,8 @@ chunk sizes small enough that every conversation spans many chunks
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 
@@ -67,7 +69,8 @@ def test_single_pass_routing_equals_plain(spark):
 
 def test_single_pass_scans_input_once(spark):
     """The salted plan reads the full-width input ONCE (plus the
-    column-pruned scans for the hot dim and the chunk sums)."""
+    column-pruned scans for the hot dim and the chunk sums), and its
+    exchange, sort and Window counts cannot grow silently."""
     from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
@@ -80,6 +83,15 @@ def test_single_pass_scans_input_once(spark):
     scans = [l for l in plan.splitlines() if "Scan parquet" in l]
     n_wide = sum(1 for l in scans if "props" in l)
     assert n_wide == 1, f"expected 1 full-width scan, saw {n_wide}:\n" + "\n".join(scans)
+    # the feature windows run featurize's builders over (conv_id, chunk):
+    # measured 8 exchanges, 9 sorts and 10 Window operators.  More means a
+    # builder stopped sharing the chunk partitioning or ordering.
+    n_exchanges = plan.count("Exchange hashpartitioning")
+    n_sorts = len(re.findall(r"\bSort \[", plan))
+    n_windows = len(re.findall(r"\bWindow \[", plan))
+    assert n_exchanges <= 8, f"exchanges: {n_exchanges}\n{plan[:3000]}"
+    assert n_sorts <= 9, f"sorts: {n_sorts}\n{plan[:3000]}"
+    assert n_windows <= 10, f"window operators: {n_windows}\n{plan[:3000]}"
 
 
 def test_chunk_size_guard(spark):

@@ -271,9 +271,10 @@ def regression_state_bucketed(
     regrouping), but NO whole-key window anywhere: a 10^8-turn conversation
     is processed in ``chunk_size``-row slices instead of one task.
 
-    The ``salt.py`` offset pattern (salt.py:346-380): within-chunk
-    cumulative sums over (key, chunk) + per-chunk totals, chained into
-    exclusive cross-chunk offsets by a tiny one-row-per-chunk window.
+    The ``salt.py`` offset pattern (``salt._featurize_salted``'s chunk
+    summaries, ``offsets`` and ``shifted``): within-chunk cumulative sums
+    over (key, chunk) + per-chunk totals, chained into exclusive
+    cross-chunk offsets by a tiny one-row-per-chunk window.
     Chunks are ``floor(tiebreak / chunk_size)`` — valid because
     ``tiebreak`` (turn_idx) is the dense stable order aligned with
     (ts, tiebreak), the ingest invariant.

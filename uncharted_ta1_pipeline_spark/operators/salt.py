@@ -1,26 +1,34 @@
-"""Hot-conversation salting: two-level (chunked) window features.
+"""Hot-conversation salting: the featurize builders over bounded chunks.
 
 ``Window.partitionBy(conv_id)`` serializes a whole conversation onto one
 task — a conversation with 10^8 turns breaks it (SURVEY.md §7.3).  The
-north_rule therefore requires explicit salting.  For associative prefix
-features the classic two-phase trick applies (the reference's analog is
-tiling + offset-restore, /root/reference/tasks/text_extraction/
-text_extractor.py:350-382 and tiling.py:46-228: process bounded tiles with
-overlap, then shift results back into the global frame):
+north_rule therefore requires explicit salting.  The reference tiles
+oversized inputs, runs the SAME extractor on every tile and shifts the
+results back into the global frame (the reference's tasks/text_extraction/
+text_extractor.py:350-382 and tiling.py:46-228).  This module does the
+same: every feature is defined once, by the builders of
+``operators/windows.py``, and runs here over ``(conv_id, chunk)`` instead
+of ``conv_id``.  What this module owns is the physical machinery:
 
-1. salt each row with ``chunk = floor(turn_idx / chunk_size)`` (turn_idx is
-   the dense stable order, so chunks are balanced and the salt is free);
-2. duplicate boundary rows arithmetically — each chunk's last ``k`` rows
-   are also emitted into the NEXT chunk (tail carries ≈ tile overlap), and
-   each chunk's first row into the PREVIOUS chunk (head carry) — so
-   lag/lead/rolling frames are exact inside one bounded window;
-3. per-(conv, chunk) aggregates — ONE tiny row per chunk — are chained with
-   a second window over chunks and broadcast-joined back to resolve prefix
-   sums, forward-fill, and session-id offsets.
+1. routing: a broadcast hot flag sends the conversations above
+   ``hot_threshold`` turns to chunks ``floor(turn_idx / chunk_size)``
+   (turn_idx is the dense stable order, so chunks are balanced and the
+   salt is free); cold conversations keep one chunk;
+2. carries: each chunk's last ``k`` rows are also emitted into the NEXT
+   chunk (tail carries ≈ tile overlap) and its first row into the
+   PREVIOUS chunk (head carry), so lag/lead and rolling frames over the
+   augmented chunk are exact; prefix features run over the real rows only;
+3. offsets: per-(conv, chunk) summaries of a narrow hot-only scan — ONE
+   tiny row per chunk — are chained by a window over chunks and
+   broadcast-joined back to shift the within-chunk prefix counts,
+   forward-fill and session ids into the global frame.  A tool's global
+   first use in a hot conversation comes from a broadcast per-(conv, tool)
+   min instead of a whole-conversation window.
 
-Physical plan: ONE full shuffle+sort on (conv_id, chunk) for the main
-window, one bounded shuffle on (conv_id, tool) for global tool
-first-occurrence, and broadcast joins for the tiny chunk-level tables.
+Physical plan: the chunk windows reuse the input's conv_id partitioning
+(no exchange of their own) in one sort on (conv_id, chunk, ts, turn_idx);
+the hot dim, the first-use min and the chunk summaries are narrow
+branches joined back by broadcast.
 
 ``featurize_hybrid`` returns exactly the same columns and values as
 ``operators.windows.featurize`` (asserted in tests) — salting is a
@@ -32,6 +40,19 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from uncharted_ta1_pipeline_spark.operators.windows import (
+    _cumulative_cols,
+    _ffill_tool_col,
+    _first_use_col,
+    _lag_lead_cols,
+    _lag_lead_finish,
+    _rolling_cols,
+    _tool_used,
+    featurize,
+    session_id_col,
+    turn_order,
+)
 
 DEFAULT_CHUNK = 16384
 DEFAULT_HOT_THRESHOLD = 65536
@@ -62,8 +83,6 @@ def featurize_hybrid(
             f"chunk_size ({chunk_size}) must exceed rolling_width "
             f"({rolling_width}): tail carries only reach one chunk ahead"
         )
-    from uncharted_ta1_pipeline_spark.operators.windows import featurize
-
     # Routing flag: the hot set is by construction tiny — at most
     # |data| / hot_threshold conversations (~15M at the 10^12-turn design
     # point) — so it broadcast-joins as a (conv_id) dim.  NO driver-side
@@ -106,7 +125,7 @@ def _featurize_salted(
     """
     k = rolling_width
     cs = chunk_size
-    non_empty = F.col("tool").isNotNull() & (F.col("tool") != "")
+    non_empty = _tool_used() == 1
     hot = F.coalesce(F.col("_hot"), F.lit(False))
 
     # Global first occurrence of each tool WITHOUT an unbounded window: a
@@ -117,7 +136,7 @@ def _featurize_salted(
     # of |hot| x |tool vocabulary| rows.  NOTE the vocabulary factor: at the
     # 10^12-turn design point (~15M hot convs x 50-100 tools) this dim
     # outgrows a broadcast; no input this engine runs reaches that.  Cold
-    # conversations keep the window but keyed by (conv, tool, _chunk),
+    # conversations keep the window but keyed by (conv, _chunk, tool),
     # whose groups the router bounds.
     hot_rows = df.filter(hot)
     firsts = F.broadcast(
@@ -125,37 +144,23 @@ def _featurize_salted(
         .groupBy("conv_id", "tool")
         .agg(F.min(F.struct("ts", "turn_idx")).alias("_fp"))
     )
-
+    # equality-to-min flags EVERY row tying the per-(conv, tool) minimum —
+    # exactly one row only because (ts, turn_idx) is unique per
+    # conversation (turn_idx is the dense 0-based stable order; the ingest
+    # invariant this module requires, asserted in tests/test_salt.py).  A
+    # duplicate (conv_id, turn_idx) row would be malformed input upstream
+    # of this operator, not a tie to break here.  (ADVICE r3)
+    hot_first = ((F.struct("ts", "turn_idx") == F.col("_fp")) & non_empty).cast("long")
     base = (
-        df.withColumn("_us", F.unix_micros(F.col("ts")))
-        .withColumn(
+        df.withColumn(
             "_chunk",
             F.when(hot, F.floor(F.col("turn_idx") / F.lit(cs))).otherwise(F.lit(0)),
         )
-        .withColumn("_used", non_empty.cast("long"))
         .join(firsts, on=["conv_id", "tool"], how="left")
+        .select("*", _first_use_col(("conv_id", "_chunk")))
         .withColumn(
-            "_first_use",
-            (
-                # equality-to-min flags EVERY row tying the per-(conv, tool)
-                # minimum — exactly one row only because (ts, turn_idx) is
-                # unique per conversation (turn_idx is the dense 0-based
-                # stable order; the ingest invariant this module requires,
-                # asserted in tests/test_salt.py).  A duplicate (conv_id,
-                # turn_idx) row would be malformed input upstream of this
-                # operator, not a tie to break here.  (ADVICE r3)
-                F.when(
-                    hot, F.struct("ts", "turn_idx") == F.col("_fp")
-                ).otherwise(
-                    F.row_number().over(
-                        Window.partitionBy("conv_id", "tool", "_chunk").orderBy(
-                            "ts", "turn_idx"
-                        )
-                    )
-                    == 1
-                )
-                & non_empty
-            ).cast("long"),
+            "_first_tool_use",
+            F.when(hot, hot_first).otherwise(F.col("_first_tool_use")),
         )
         .drop("_fp")
     )
@@ -184,70 +189,26 @@ def _featurize_salted(
         "*", F.col("_t.tgt").alias("_tgt"), F.col("_t.kind").alias("_kind")
     )
 
-    # ---- the ONE bounded window: (conv, target-chunk) in true turn order ----
-    w = Window.partitionBy("conv_id", "_tgt").orderBy("ts", "turn_idx")
-    past = w.rowsBetween(Window.unboundedPreceding, -1)
-    incl = w.rowsBetween(Window.unboundedPreceding, 0)
-    roll = w.rowsBetween(-k, -1)
-    real = F.col("_kind") == 0
-    rflag = real.cast("long")
-
-    a = (
-        stream
-        # carries sit exactly where the true neighbours sit, so plain
-        # lag/lead over the augmented stream are the true lag/lead:
-        .withColumn("_lag", F.lag(F.struct("role", "tool", "_us")).over(w))
-        .withColumn("next_role", F.lead("role").over(w))
-        # within-chunk prefix sums count REAL rows only (carries are
-        # duplicates; prior chunks arrive via offsets):
-        .withColumn("_p_turns", F.coalesce(F.sum(rflag).over(past), F.lit(0)))
-        .withColumn(
-            "_p_tools",
-            F.coalesce(F.sum(F.when(real, F.col("_used"))).over(past), F.lit(0)),
-        )
-        .withColumn(
-            "_p_firsts",
-            F.coalesce(F.sum(F.when(real, F.col("_first_use"))).over(past), F.lit(0)),
-        )
-        .withColumn(
-            "_p_ffill",
-            F.last(F.when(real & non_empty, F.col("tool")), ignorenulls=True).over(
-                past
-            ),
-        )
-        # rolling frames DO count carries — they are the true last-k turns:
-        .withColumn("rolling_turns_%d" % k, F.coalesce(F.count(F.lit(1)).over(roll), F.lit(0)))
-        .withColumn("rolling_tools_%d" % k, F.coalesce(F.sum("_used").over(roll), F.lit(0)))
-        .withColumn("rolling_signal_mean_%d" % k, F.round(F.avg("signal").over(roll), 6))
-        .withColumn("prev_role", F.col("_lag.role"))
-        .withColumn("prev_tool", F.col("_lag.tool"))
-        .withColumn(
-            "secs_since_prev",
-            F.round((F.col("_us") - F.col("_lag._us")) / F.lit(1000000.0), 6),
-        )
-        .withColumn(
-            "role_transition",
-            F.concat(
-                F.coalesce(F.col("prev_role"), F.lit("START")),
-                F.lit("->"),
-                F.col("role"),
-            ),
-        )
-        .withColumn(
-            "_is_new",
-            (
-                F.col("_lag._us").isNull()
-                | ((F.col("_us") - F.col("_lag._us")) > F.lit(gap_s * 1_000_000))
-            ).cast("long"),
-        )
-        .withColumn(
-            "_p_sess", F.sum(F.when(real, F.col("_is_new"))).over(incl)
+    # ---- featurize's builders over the bounded (conv, target-chunk) window --
+    # Carries sit exactly where the true neighbours sit, so lag/lead and the
+    # rolling frames over the augmented stream are the true ones.  Prefix
+    # features then run over the real rows only (carries are duplicates)
+    # and count within the chunk; prior chunks arrive via offsets below.
+    p = ("conv_id", "_tgt")
+    reals = (
+        stream.select("*", *_lag_lead_cols(p), *_rolling_cols(k, p))
+        .filter(F.col("_kind") == 0)
+        .select(
+            "*",
+            *_cumulative_cols(p),
+            _ffill_tool_col(p),
+            session_id_col(F.col("_prev_us"), gap_s, p),
         )
     )
 
     # ---- chunk summaries (ONE tiny row per (conv, chunk)) -------------------
     # Computed from a NARROW re-derivation of the input, NOT from the
-    # exploded/windowed frame ``a``: reusing ``a`` here would evaluate the
+    # exploded/windowed stream: reusing it here would evaluate the
     # expensive augmented-stream window TWICE (once for output rows, once
     # for these sums — measured 2.3x the plain path at sf0.1).  The sums
     # need only (conv_id, ts, turn_idx, tool), so this branch is a
@@ -257,35 +218,28 @@ def _featurize_salted(
     # offsets: cold chunks are whole conversations (their within-chunk
     # prefixes are already global), so the offsets dim stays tiny and
     # broadcastable even with 10^8 cold convs.
-    reals = a.filter(real)
     # Session-start flags WITHOUT a whole-conversation window: within-chunk
     # gaps via a (conv, chunk)-bounded lag, and the chunk-boundary gap via
     # the tiny per-chunk summary (head vs previous chunk's tail) — the same
     # head-carry trick the main stream uses.  A whole-key lag here would
     # funnel each hot conversation through ONE task (10^8-turn killer; the
     # old shape cost ~5s of 3-task tail on the 12M-turn bench).
-    w_chunk_n = Window.partitionBy("conv_id", "_tgt").orderBy("ts", "turn_idx")
+    gap_us = F.lit(gap_s * 1_000_000)
     nb = (
         hot_rows.select("conv_id", "ts", "turn_idx", "tool")
         .withColumn("_us", F.unix_micros(F.col("ts")))
         .withColumn("_tgt", F.floor(F.col("turn_idx") / F.lit(cs)))
-        .withColumn("_used", non_empty.cast("long"))
         # hot_rows is the hot slice, so every row resolves its global
         # first-use against the broadcast dim — no window needed here
         .join(firsts, on=["conv_id", "tool"], how="left")
-        .withColumn(
-            "_first_use",
-            ((F.struct("ts", "turn_idx") == F.col("_fp")) & non_empty).cast("long"),
-        )
-        .drop("_fp")
-        .withColumn("_prev_us", F.lag("_us").over(w_chunk_n))
+        .withColumn("_prev_us", F.lag("_us").over(turn_order(p)))
         .withColumn(
             # chunk-interior gaps only; each chunk's head row is resolved
             # against the previous chunk's tail at the summary level below
             "_is_new_in",
             (
                 F.col("_prev_us").isNotNull()
-                & ((F.col("_us") - F.col("_prev_us")) > F.lit(gap_s * 1_000_000))
+                & ((F.col("_us") - F.col("_prev_us")) > gap_us)
             ).cast("long"),
         )
     )
@@ -294,8 +248,8 @@ def _featurize_salted(
         nb.groupBy("conv_id", "_tgt")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum("_used").alias("_tools"),
-            F.sum("_first_use").alias("_firsts"),
+            F.sum(_tool_used()).alias("_tools"),
+            F.sum(hot_first).alias("_firsts"),
             F.sum("_is_new_in").alias("_sess_in"),
             F.min(F.struct("ts", "turn_idx", "_us")).alias("_head"),
             F.max(F.struct("ts", "turn_idx", "_us")).alias("_tail"),
@@ -306,10 +260,7 @@ def _featurize_salted(
             "_head_new",
             (
                 F.col("_prev_tail_us").isNull()
-                | (
-                    (F.col("_head._us") - F.col("_prev_tail_us"))
-                    > F.lit(gap_s * 1_000_000)
-                )
+                | ((F.col("_head._us") - F.col("_prev_tail_us")) > gap_us)
             ).cast("long"),
         )
         .withColumn("_sess", F.col("_sess_in") + F.col("_head_new"))
@@ -325,31 +276,19 @@ def _featurize_salted(
         F.last(F.col("_lt.tool"), ignorenulls=True).over(prior).alias("_carry_ffill"),
     )
 
-    z = F.lit(0)
-    out = (
-        reals.join(F.broadcast(offsets), on=["conv_id", "_tgt"], how="left")
-        .withColumn(
-            "turns_so_far", F.col("_p_turns") + F.coalesce(F.col("_off_turns"), z)
+    def shifted(col: str, off: str) -> F.Column:
+        return (F.col(col) + F.coalesce(F.col(off), F.lit(0))).alias(col)
+
+    out = reals.join(F.broadcast(offsets), on=["conv_id", "_tgt"], how="left")
+    return _lag_lead_finish(
+        out.select(
+            *input_cols,
+            "prev_role", "next_role", "prev_tool", "_prev_us",
+            shifted("turns_so_far", "_off_turns"),
+            shifted("tools_so_far", "_off_tools"),
+            shifted("distinct_tools_so_far", "_off_firsts"),
+            f"rolling_turns_{k}", f"rolling_tools_{k}", f"rolling_signal_mean_{k}",
+            F.coalesce(F.col("ffill_tool"), F.col("_carry_ffill")).alias("ffill_tool"),
+            shifted("session_id", "_off_sess"),
         )
-        .withColumn(
-            "tools_so_far", F.col("_p_tools") + F.coalesce(F.col("_off_tools"), z)
-        )
-        .withColumn(
-            "distinct_tools_so_far",
-            F.col("_p_firsts") + F.coalesce(F.col("_off_firsts"), z),
-        )
-        .withColumn("ffill_tool", F.coalesce(F.col("_p_ffill"), F.col("_carry_ffill")))
-        .withColumn(
-            "session_id",
-            (F.col("_p_sess") + F.coalesce(F.col("_off_sess"), z) - F.lit(1)).cast(
-                "long"
-            ),
-        )
-    )
-    return out.select(
-        *input_cols,
-        "prev_role", "next_role", "prev_tool", "role_transition", "secs_since_prev",
-        "turns_so_far", "tools_so_far", "distinct_tools_so_far",
-        f"rolling_turns_{k}", f"rolling_tools_{k}", f"rolling_signal_mean_{k}",
-        "ffill_tool", "session_id",
     )

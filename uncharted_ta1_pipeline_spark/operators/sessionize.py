@@ -17,24 +17,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from uncharted_ta1_pipeline_spark.operators.windows import turn_order
+from uncharted_ta1_pipeline_spark.operators.windows import session_id_col, turn_order
 
 DEFAULT_GAP_S = 1800
-
-
-def session_id_col(prev_us: F.Column, gap_s: int) -> F.Column:
-    """``session_id`` (0-based per conversation) from the previous turn's
-    ts in integer micros: a new session starts when the gap to the
-    previous turn is strictly greater than ``gap_s`` seconds."""
-    us = F.unix_micros(F.col("ts"))
-    is_new = (prev_us.isNull() | ((us - prev_us) > F.lit(gap_s * 1_000_000))).cast(
-        "long"
-    )
-    return (
-        (F.sum(is_new).over(turn_order().rowsBetween(Window.unboundedPreceding, 0)) - F.lit(1))
-        .cast("long")
-        .alias("session_id")
-    )
 
 
 def with_sessions(df: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame:
@@ -44,9 +29,14 @@ def with_sessions(df: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame:
     greater than ``gap_s`` seconds."""
     # lag the ts column itself, not an expression of it: a window over
     # input columns only merges into a window below it with the same spec,
-    # so only the running sum adds a level
-    prev_us = F.unix_micros(F.lag("ts").over(turn_order()))
-    return df.select("*", session_id_col(prev_us, gap_s))
+    # so only the running sum adds a level.  The lag is named so the
+    # session flag, which reads it twice, evaluates it once.
+    prev_us = F.unix_micros(F.lag("ts").over(turn_order())).alias("_prev_us")
+    return (
+        df.select("*", prev_us)
+        .select("*", session_id_col(F.col("_prev_us"), gap_s))
+        .drop("_prev_us")
+    )
 
 
 def denoise_segments(

@@ -7,11 +7,15 @@ greedy monotone grouping :621-688, overlap dedup
 ``pyspark.sql.Window`` specs partitioned by ``conv_id`` and ordered by
 ``(ts, turn_idx)`` — the stable turn-ordering invariant.
 
-Each feature's window columns are defined once, by a private builder that
-returns named Columns.  The ``with_*`` functions select one builder's
-columns; ``featurize`` selects them all at once, so Spark evaluates every
-frame that shares the (conv_id) ORDER BY (ts, turn_idx) spec in one Window
-operator over one sorted run.
+Each feature's window columns are defined once, by a builder that returns
+named Columns over the partition it is given (``conv_id`` by default).
+The ``with_*`` functions select one builder's columns; ``featurize``
+selects them all at once, so Spark evaluates every frame that shares the
+(conv_id) ORDER BY (ts, turn_idx) spec in one Window operator over one
+sorted run.  The salted path (``operators/salt.py``) runs the same
+builders over (conv_id, chunk) and shifts the prefix features by
+per-chunk offsets, so each feature has one definition whichever path
+computes it.
 
 ZERO-LEAKAGE CONTRACT: every cumulative/rolling frame ends at ``-1``
 (strictly past).  A frame ending at 0 would let a feature see its own turn;
@@ -26,9 +30,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.window import WindowSpec
 
 PAST = Window.unboundedPreceding
+CONV = ("conv_id",)
 
 
-def turn_order(partition_cols=("conv_id",)) -> WindowSpec:
+def turn_order(partition_cols=CONV) -> WindowSpec:
     """Canonical per-conversation ordering: ts, tie-broken by turn_idx."""
     return Window.partitionBy(*partition_cols).orderBy("ts", "turn_idx")
 
@@ -37,13 +42,13 @@ def _tool_used() -> F.Column:
     return (F.col("tool").isNotNull() & (F.col("tool") != "")).cast("long")
 
 
-def _lag_lead_cols() -> list[F.Column]:
+def _lag_lead_cols(partition_cols=CONV) -> list[F.Column]:
     """The lag/lead window columns.  Each lag is evaluated once:
     ``role_transition`` and ``secs_since_prev`` are derived from
     ``prev_role`` and ``_prev_us`` in the projection above the window
     (``_lag_lead_finish``), and featurize's session flag reads
     ``_prev_us`` too."""
-    w = turn_order()
+    w = turn_order(partition_cols)
     return [
         F.lag("role").over(w).alias("prev_role"),
         F.lead("role").over(w).alias("next_role"),
@@ -65,9 +70,10 @@ def _lag_lead_finish(df: DataFrame) -> DataFrame:
     return df.select(*[c for n in df.columns for c in (derived if n == "_prev_us" else [n])])
 
 
-def _first_use_col() -> F.Column:
-    """1 on the first (ts, turn_idx) use of each non-empty tool per conv."""
-    w = Window.partitionBy("conv_id", "tool").orderBy("ts", "turn_idx")
+def _first_use_col(partition_cols=CONV) -> F.Column:
+    """1 on the first (ts, turn_idx) use of each non-empty tool per
+    partition."""
+    w = Window.partitionBy(*partition_cols, "tool").orderBy("ts", "turn_idx")
     return ((F.row_number().over(w) == 1) & (_tool_used() == 1)).cast("long").alias(
         "_first_tool_use"
     )
@@ -78,9 +84,9 @@ def _with_first_use(df: DataFrame, cols: list[F.Column]) -> DataFrame:
     return df.select("*", _first_use_col()).select("*", *cols).drop("_first_tool_use")
 
 
-def _cumulative_cols() -> list[F.Column]:
+def _cumulative_cols(partition_cols=CONV) -> list[F.Column]:
     """Reads the flag of ``_first_use_col`` (see ``_with_first_use``)."""
-    past = turn_order().rowsBetween(PAST, -1)
+    past = turn_order(partition_cols).rowsBetween(PAST, -1)
     return [
         F.coalesce(F.count(F.lit(1)).over(past), F.lit(0)).alias("turns_so_far"),
         F.coalesce(F.sum(_tool_used()).over(past), F.lit(0)).alias("tools_so_far"),
@@ -90,8 +96,8 @@ def _cumulative_cols() -> list[F.Column]:
     ]
 
 
-def _rolling_cols(width: int) -> list[F.Column]:
-    w = turn_order().rowsBetween(-width, -1)
+def _rolling_cols(width: int, partition_cols=CONV) -> list[F.Column]:
+    w = turn_order(partition_cols).rowsBetween(-width, -1)
     return [
         F.coalesce(F.count(F.lit(1)).over(w), F.lit(0)).alias(f"rolling_turns_{width}"),
         F.coalesce(F.sum(_tool_used()).over(w), F.lit(0)).alias(f"rolling_tools_{width}"),
@@ -99,10 +105,27 @@ def _rolling_cols(width: int) -> list[F.Column]:
     ]
 
 
-def _ffill_tool_col() -> F.Column:
-    w = turn_order().rowsBetween(PAST, -1)
+def _ffill_tool_col(partition_cols=CONV) -> F.Column:
+    w = turn_order(partition_cols).rowsBetween(PAST, -1)
     non_empty = F.when(_tool_used() == 1, F.col("tool"))
     return F.last(non_empty, ignorenulls=True).over(w).alias("ffill_tool")
+
+
+def session_id_col(prev_us: F.Column, gap_s: int, partition_cols=CONV) -> F.Column:
+    """``session_id`` (0-based per partition) from the previous turn's ts
+    in integer micros: a new session starts when the gap to the previous
+    turn is strictly greater than ``gap_s`` seconds.  ``prev_us`` is read
+    twice, so pass a named column: a window expression there would be
+    evaluated twice."""
+    us = F.unix_micros(F.col("ts"))
+    is_new = (prev_us.isNull() | ((us - prev_us) > F.lit(gap_s * 1_000_000))).cast(
+        "long"
+    )
+    return (
+        (F.sum(is_new).over(turn_order(partition_cols).rowsBetween(PAST, 0)) - F.lit(1))
+        .cast("long")
+        .alias("session_id")
+    )
 
 
 def with_lag_lead(df: DataFrame) -> DataFrame:
@@ -154,13 +177,11 @@ def featurize(df: DataFrame, rolling_width: int = 5, gap_s: int = 1800) -> DataF
     is its own window level; every (conv_id) ORDER BY (ts, turn_idx)
     column of the other features is then ONE select, so Spark evaluates
     them all in one Window operator over one sorted run; the session count
-    (``sessionize.session_id_col``) reads that run's ``_prev_us`` and adds
+    (``session_id_col``) reads that run's ``_prev_us`` and adds
     a second window level with no new sort.  Every window is keyed on
     conv_id, so the input's conv_id partitioning (``load_transcripts``) is
     reused and no exchange is added.
     """
-    from uncharted_ta1_pipeline_spark.operators.sessionize import session_id_col
-
     out = _with_first_use(
         df,
         [
